@@ -4,9 +4,17 @@ every processed doc and every failure code."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
+from pyspark.sql import functions as F
 
 from text_extraction_system_spark import lineage, synth
+from text_extraction_system_spark.operators import derive_spans as ds
+
+#: physical-plan nodes that run Python workers: createDataFrame(list) scans
+#: and the Python-evaluated operators
+_PYTHON_PLAN = re.compile(r"Scan ExistingRDD|Python|InPandas|InArrow")
 
 
 @pytest.fixture()
@@ -161,8 +169,11 @@ def test_accounting_on_fresh_base_dir(spark, tmp_path):
     """Before any run, accounting views return empty frames, not
     AnalysisException (metrics/ guard parity with commits/)."""
     fresh = str(tmp_path / "never_written")
-    assert lineage.committed_metrics(spark, fresh).count() == 0
-    assert lineage.orphan_metric_runs(spark, fresh).count() == 0
+    for df in (lineage.committed_metrics(spark, fresh),
+               lineage.orphan_metric_runs(spark, fresh)):
+        assert df.count() == 0
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert not _PYTHON_PLAN.search(plan), plan
 
 
 def test_results_commit_is_atomic_per_run(spark, base_dir):
@@ -204,3 +215,41 @@ def test_results_commit_is_atomic_per_run(spark, base_dir):
     res = spark.read.parquet(f"{base_dir}/results")
     assert res.count() == n_total
     assert res.select("doc_id").distinct().count() == n_total
+
+
+def _newest_execution(spark) -> int:
+    spark._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    it = store.executionsList(max(n - 64, 0), 64).iterator()
+    newest = -1
+    while it.hasNext():
+        newest = max(newest, it.next().executionId())
+    return newest
+
+
+def _plans_since(spark, mark: int) -> list[str]:
+    """Physical plans of the SQL executions started after ``mark``."""
+    spark._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    plans = []
+    while (e := store.execution(mark + 1 + len(plans))).isDefined():
+        plans.append(e.get().physicalPlanDescription())
+    return plans
+
+
+def test_run_extraction_plans_no_python(spark, docs_df, base_dir):
+    """A commit call and a resume call run every Spark action in the JVM:
+    the lineage and commit-marker rows are Arrow-backed local relations,
+    not createDataFrame(list) scans that start a Python worker per core."""
+    n = docs_df.count()
+    calls = (("commit", docs_df.where(F.col("doc_id") % 2 == 0)), ("resume", docs_df))
+    for run_id, docs in calls:
+        mark = _newest_execution(spark)
+        res = lineage.run_extraction(spark, ds.derive_spans(docs), base_dir, run_id=run_id)
+        plans = _plans_since(spark, mark)
+        assert len(plans) >= 4, run_id  # metrics, results, marker, extraction
+        python = [p for p in plans if _PYTHON_PLAN.search(p)]
+        assert not python, f"{run_id}: {python[0]}"
+    assert res["docs_skipped"] > 0
+    assert res["docs_processed"] + res["docs_skipped"] == n

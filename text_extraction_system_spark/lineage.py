@@ -39,13 +39,33 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from . import pipeline
 
-_METRIC_AGG_SCHEMA = (
-    "partition_id int, doc_count long, span_count long, byte_count long, "
-    "failure_count long, failure_codes array<string>"
+#: one lineage row as run_extraction builds it; metrics/ adds finished_at
+_METRIC_ROW_SCHEMA = (
+    "run_id string, snapshot_id string, partition_id int, doc_count long, "
+    "span_count long, byte_count long, failure_count long, "
+    "failure_codes array<string>"
 )
+_METRICS_SCHEMA = _METRIC_ROW_SCHEMA + ", finished_at timestamp"
+_COMMIT_ROW_SCHEMA = "run_id string, snapshot_id string, doc_count long"
+
+
+def _local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """Driver-built rows as an Arrow-backed local relation (plans as
+    ``LocalTableScan``). ``createDataFrame(list)`` would plan ``Scan
+    ExistingRDD`` over a Python map, which starts one Python-worker task
+    per core (~0.28 s each) for even a one-row bookkeeping write."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = T.StructType.fromDDL(ddl)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema=schema)
 
 
 def snapshot_id(docs: DataFrame) -> str:
@@ -229,17 +249,9 @@ def run_extraction(
         # committed_metrics() via the commits/ marker written last, and the
         # resume rerun writes its own complete accounting), whereas the
         # reverse order would permanently lose accounting for committed docs.
-        metrics = spark.createDataFrame(metric_rows, schema=_METRIC_AGG_SCHEMA).select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(snap).alias("snapshot_id"),
-            "partition_id",
-            "doc_count",
-            "span_count",
-            "byte_count",
-            "failure_count",
-            "failure_codes",
-            F.current_timestamp().alias("finished_at"),
-        )
+        metrics = _local_frame(
+            spark, [(run_id, snap, *r) for r in metric_rows], _METRIC_ROW_SCHEMA
+        ).withColumn("finished_at", F.current_timestamp())
         metrics.write.mode("append").parquet(os.path.join(base_dir, "metrics"))
         # ATOMIC per-run results commit: stage the run's rows in a scratch
         # dir, then one os.rename into results/run_id=<id>/ — the partition
@@ -259,9 +271,10 @@ def run_extraction(
         # completion marker LAST: a run_id present in metrics but absent from
         # commits/ is mechanically identifiable as an orphan (crashed between
         # metrics and results) — see committed_metrics(). One tiny row.
-        spark.createDataFrame(
+        _local_frame(
+            spark,
             [(run_id, snap, sum(r["doc_count"] for r in metric_rows))],
-            schema="run_id string, snapshot_id string, doc_count long",
+            _COMMIT_ROW_SCHEMA,
         ).withColumn("committed_at", F.current_timestamp()).write.mode(
             "append"
         ).parquet(os.path.join(base_dir, "commits"))
@@ -278,20 +291,13 @@ def run_extraction(
     }
 
 
-_METRICS_SCHEMA = (
-    "run_id string, snapshot_id string, partition_id int, doc_count long, "
-    "span_count long, byte_count long, failure_count long, "
-    "failure_codes array<string>, finished_at timestamp"
-)
-
-
 def _read_metrics(spark: SparkSession, base_dir: str) -> DataFrame:
     """metrics/ with an existence guard (same treatment as commits/): a
     fresh base_dir returns an empty frame with the metrics schema instead
     of raising AnalysisException."""
     path = os.path.join(base_dir, "metrics")
     if not os.path.exists(path):
-        return spark.createDataFrame([], schema=_METRICS_SCHEMA)
+        return _local_frame(spark, [], _METRICS_SCHEMA)
     return spark.read.parquet(path)
 
 
@@ -316,7 +322,7 @@ def _committed_run_ids(spark: SparkSession, base_dir: str) -> DataFrame:
     if results is not None:
         parts.append(results.select("run_id"))
     if not parts:
-        return spark.createDataFrame([], schema="run_id string")
+        return _local_frame(spark, [], "run_id string")
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

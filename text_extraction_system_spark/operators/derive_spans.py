@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..core import spec
+from .exprutil import per_jvm
 
 _HEX = "0123456789abcdef"
 
@@ -80,9 +81,12 @@ def derived_spans_col(doc_id: Column, text: Column) -> Column:
     )
 
 
+@per_jvm
+def _spans_projection(doc_id_col: str, text_col: str) -> tuple[Column, Column]:
+    doc_id = F.col(doc_id_col).cast("string")
+    return doc_id.alias("doc_id"), derived_spans_col(doc_id, F.col(text_col)).alias("spans")
+
+
 def derive_spans(docs: DataFrame, doc_id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """documents -> (doc_id: string, spans: array<struct<...>>)."""
-    return docs.select(
-        F.col(doc_id_col).cast("string").alias("doc_id"),
-        derived_spans_col(F.col(doc_id_col).cast("string"), F.col(text_col)).alias("spans"),
-    )
+    return docs.select(*_spans_projection(doc_id_col, text_col))

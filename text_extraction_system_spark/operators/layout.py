@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..core import spec
+from .exprutil import per_jvm
 
 
 def page_texts_col(out_spans: Column, dense: bool | None = None) -> Column:
@@ -287,19 +288,22 @@ def pages_col(page_texts: Column) -> Column:
     ).otherwise(_scan_pages_col(page_texts))
 
 
+@per_jvm
+def _assembly_cols(dense: bool | None) -> tuple[Column, Column, Column]:
+    page_texts = F.col("_page_texts")
+    return (
+        page_texts_col(F.col("out_spans"), dense=dense),
+        plain_text_col(page_texts).alias("plain_text"),
+        pages_col(page_texts).alias("pages"),
+    )
+
+
 def assemble(stitched: DataFrame, dense: bool | None = None) -> DataFrame:
     """(doc_id, needs_ocr, parse_failures, out_spans) -> + (plain_text, pages).
 
     ``dense`` is the static offset-density contract forwarded to
     ``page_texts_col`` — pass True when the spans were engine-derived."""
-    with_pages = stitched.withColumn(
-        "_page_texts", page_texts_col(F.col("out_spans"), dense=dense)
-    )
-    return with_pages.select(
-        "doc_id",
-        "needs_ocr",
-        "parse_failures",
-        "out_spans",
-        plain_text_col(F.col("_page_texts")).alias("plain_text"),
-        pages_col(F.col("_page_texts")).alias("pages"),
+    page_texts, plain_text, pages = _assembly_cols(dense)
+    return stitched.withColumn("_page_texts", page_texts).select(
+        "doc_id", "needs_ocr", "parse_failures", "out_spans", plain_text, pages
     )

@@ -21,29 +21,48 @@ span-sequence-equality invariant.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from . import ocr
+from .exprutil import per_jvm
 
 DEFAULT_FANOUT_THRESHOLD = 256
+
+
+@per_jvm
+def _decision_cols() -> tuple[Column, Column]:
+    """The doc-level OCR decision and failure codes over ``spans``."""
+    return (
+        ocr.needs_ocr_col(F.col("spans")).alias("needs_ocr"),
+        ocr.parse_failures_col(F.col("spans")).alias("parse_failures"),
+    )
+
+
+@per_jvm
+def _inline_out_spans_col() -> Column:
+    return F.transform(
+        F.col("spans"), lambda s: ocr.apply_ocr_to_span(s, F.col("needs_ocr"))
+    ).alias("out_spans")
+
+
+@per_jvm
+def _fanout_cols() -> tuple[Column, Column, Column]:
+    """Per-span OCR over the exploded ``s``, the ordered gather of the
+    results, and the unkeying of the gathered array."""
+    mapped = ocr.apply_ocr_to_span(F.col("s"), F.col("needs_ocr")).alias("o")
+    keyed = F.array_sort(
+        F.collect_list(F.struct(F.col("o.offset").alias("offset"), F.col("o").alias("s")))
+    ).alias("keyed")
+    out_spans = F.transform(F.col("keyed"), lambda k: k["s"]).alias("out_spans")
+    return mapped, keyed, out_spans
 
 
 def process_spans_inline(spans_df: DataFrame) -> DataFrame:
     """(doc_id, spans) -> (doc_id, needs_ocr, out_spans, parse_failures);
     no shuffle."""
-    return spans_df.select(
-        "doc_id",
-        ocr.needs_ocr_col(F.col("spans")).alias("needs_ocr"),
-        ocr.parse_failures_col(F.col("spans")).alias("parse_failures"),
-        "spans",
-    ).select(
-        "doc_id",
-        "needs_ocr",
-        "parse_failures",
-        F.transform(
-            F.col("spans"), lambda s: ocr.apply_ocr_to_span(s, F.col("needs_ocr"))
-        ).alias("out_spans"),
+    return spans_df.select("doc_id", *_decision_cols(), "spans").select(
+        "doc_id", "needs_ocr", "parse_failures", _inline_out_spans_col()
     )
 
 
@@ -58,12 +77,7 @@ def process_spans_fanout(spans_df: DataFrame, may_have_empty: bool = True) -> Da
     extra input scan) when the caller guarantees every doc has spans — true
     for the routed path, where empty docs always go inline.
     """
-    decided = spans_df.select(
-        "doc_id",
-        ocr.needs_ocr_col(F.col("spans")).alias("needs_ocr"),
-        ocr.parse_failures_col(F.col("spans")).alias("parse_failures"),
-        "spans",
-    )
+    decided = spans_df.select("doc_id", *_decision_cols(), "spans")
     exploded = decided
     empty = None
     if may_have_empty:
@@ -76,23 +90,10 @@ def process_spans_fanout(spans_df: DataFrame, may_have_empty: bool = True) -> Da
     exploded = exploded.select(
         "doc_id", "needs_ocr", "parse_failures", F.explode("spans").alias("s")
     )
-    mapped = exploded.select(
-        "doc_id",
-        "needs_ocr",
-        "parse_failures",
-        ocr.apply_ocr_to_span(F.col("s"), F.col("needs_ocr")).alias("o"),
-    )
-    gathered = mapped.groupBy("doc_id", "needs_ocr", "parse_failures").agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("o.offset").alias("offset"), F.col("o").alias("s")))
-        ).alias("keyed")
-    )
-    out = gathered.select(
-        "doc_id",
-        "needs_ocr",
-        "parse_failures",
-        F.transform(F.col("keyed"), lambda k: k["s"]).alias("out_spans"),
-    )
+    mapped_col, keyed_col, out_spans_col = _fanout_cols()
+    mapped = exploded.select("doc_id", "needs_ocr", "parse_failures", mapped_col)
+    gathered = mapped.groupBy("doc_id", "needs_ocr", "parse_failures").agg(keyed_col)
+    out = gathered.select("doc_id", "needs_ocr", "parse_failures", out_spans_col)
     return out.unionByName(empty) if empty is not None else out
 
 
