@@ -155,7 +155,7 @@ def _q_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W2/A8: paragraph segmentation offsets + per-paragraph language
-    (mapInPandas row-per-paragraph; shares rule code with the oracle)."""
+    (Arrow kernel, row-per-paragraph; shares rule code with the oracle)."""
     res = pipeline.extract_from_documents(_docs(spark, sf_dir), with_structure=False)
     return structure_op.paragraph_rows(res)
 
@@ -665,8 +665,8 @@ def _q_media_rotate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """I1-I5 analog: binary media payloads -> typed metadata via Arrow
-    mapInPandas (deterministic fake decode; real binary plumbing)."""
+    """I1-I5 analog: binary media payloads -> typed metadata via an Arrow
+    kernel (deterministic fake decode; real binary plumbing)."""
     return multimodal.decode_media(_docs(spark, sf_dir))
 
 

@@ -7,7 +7,7 @@ from __future__ import annotations
 import numpy as np
 
 from text_extraction_system_spark.core import tables as T
-from text_extraction_system_spark.operators import tables_op
+from text_extraction_system_spark.operators import arrowmap, tables_op
 
 
 def _grid(ox, oy, n_rows, n_cols, cw=50, ch=20, gap=4):
@@ -88,6 +88,8 @@ def test_six_tables_archetype(spark):
     media = sdf.selectExpr("doc_id", "explode(spans) as s").where(
         "s.kind = 'media'"
     ).selectExpr("doc_id", "s.media_ref as media_ref")
-    rows = media.mapInPandas(tables_op._batches, tables_op.TABLE_ROWS_SCHEMA).collect()
+    rows = arrowmap.map_batches(
+        media, tables_op._batches, tables_op.TABLE_ROWS_SCHEMA
+    ).collect()
     assert len(rows) == 6
     assert {r["media_ref"] for r in rows} == {f"media://tables_0/{k}" for k in range(6)}

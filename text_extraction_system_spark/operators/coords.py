@@ -15,13 +15,12 @@ pytest (tests/test_charboxes.py, tests/test_geometry.py).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from ..core import charboxes
+from . import arrowmap
 
 CHAR_STATS_SCHEMA = (
     "doc_id string, n_chars long, n_boxes long, n_zero long, sum_x long, sum_y long"
@@ -32,33 +31,32 @@ def _bounds(pages: list) -> list[tuple[int, int]]:
     return [(p["start"], p["end"]) for p in pages]
 
 
-def _batch(pdf: pd.DataFrame) -> tuple[list[str], charboxes.BatchBoxes]:
-    texts = [t or "" for t in pdf["plain_text"]]
-    return texts, charboxes.BatchBoxes(texts, [_bounds(p) for p in pdf["pages"]])
+def _batch(batch: pa.RecordBatch) -> tuple[list[str], charboxes.BatchBoxes]:
+    texts = [t or "" for t in arrowmap.values(batch, "plain_text")]
+    pages = arrowmap.values(batch, "pages")
+    return texts, charboxes.BatchBoxes(texts, [_bounds(p) for p in pages])
 
 
 def char_coord_stats(assembled: DataFrame) -> DataFrame:
     """Per-doc char-box aggregates (len(text)==len(boxes) is part of the
     emitted data: n_chars vs n_boxes)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "n_chars", "n_boxes", "n_zero", "sum_x", "sum_y"]
-        for pdf in batches:
-            texts, bb = _batch(pdf)
+    def gen(batches):
+        for batch in batches:
+            _, bb = _batch(batch)
             n = bb.doc_off[1:] - bb.doc_off[:-1]
-            out = pd.DataFrame({
-                "doc_id": pdf["doc_id"].to_numpy(),
+            yield {
+                "doc_id": batch.column("doc_id"),
                 "n_chars": n,
                 "n_boxes": n,  # the invariant: one box per char
                 "n_zero": bb.doc_sums(~bb.printable),
                 # box coords are integral multiples of CHAR_W/H — exact int64
                 "sum_x": bb.doc_sums(bb.boxes[:, 0]),
                 "sum_y": bb.doc_sums(bb.boxes[:, 1]),
-            })
-            yield out[cols]
+            }
 
-    return assembled.select("doc_id", "plain_text", "pages").mapInPandas(
-        gen, schema=CHAR_STATS_SCHEMA
+    return arrowmap.map_batches(
+        assembled.select("doc_id", "plain_text", "pages"), gen, CHAR_STATS_SCHEMA
     )
 
 
@@ -83,27 +81,26 @@ def text_to_coords(assembled: DataFrame) -> DataFrame:
     CHAR_W/CHAR_H keep the emitted coords exact bigints (SQL-oracle-checkable).
     """
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "par_start", "par_end", "x", "y", "w", "h"]
-        for pdf in batches:
-            texts, bb = _batch(pdf)
+    def gen(batches):
+        for batch in batches:
+            texts, bb = _batch(batch)
             starts, ends, docs = bb.runs(bb.printable)
             x0 = bb.boxes[starts, 0].astype(np.int64)
             y0 = bb.boxes[starts, 1].astype(np.int64)
             x1 = (bb.boxes[ends - 1, 0] + bb.boxes[ends - 1, 2]).astype(np.int64)
             off = bb.doc_off[docs]
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].to_numpy()[docs],
+            yield {
+                "doc_id": batch.column("doc_id").take(docs),
                 "par_start": starts - off,
                 "par_end": ends - off,
                 "x": x0,
                 "y": y0,
                 "w": x1 - x0,
                 "h": np.full(len(starts), int(charboxes.CHAR_H), dtype=np.int64),
-            })[cols]
+            }
 
-    return assembled.select("doc_id", "plain_text", "pages").mapInPandas(
-        gen, schema=TEXT_COORDS_SCHEMA
+    return arrowmap.map_batches(
+        assembled.select("doc_id", "plain_text", "pages"), gen, TEXT_COORDS_SCHEMA
     )
 
 
@@ -117,17 +114,14 @@ def coords_to_text(assembled: DataFrame) -> DataFrame:
     the whole batch, then a per-doc first-of-group selection."""
     from ..core import geometry
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "sel_start", "sel_end", "sel_text"]
-        for pdf in batches:
-            texts, bb = _batch(pdf)
+    def gen(batches):
+        for batch in batches:
+            texts, bb = _batch(batch)
             if len(bb.printable) == 0:
-                yield pd.DataFrame({c: [] for c in cols})
                 continue
             mask = geometry.overlaps_enough(bb.boxes, SELECTION_AREA)
             starts, ends, docs = bb.runs(mask)
             if len(starts) == 0:
-                yield pd.DataFrame({c: [] for c in cols})
                 continue
             # per doc: longest run, earliest start on ties (argmax-first)
             order = np.lexsort((starts, -(ends - starts), docs))
@@ -136,33 +130,35 @@ def coords_to_text(assembled: DataFrame) -> DataFrame:
             off = bb.doc_off[docs[best]]
             ls = starts[best] - off
             le = ends[best] - off
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].to_numpy()[docs[best]],
+            yield {
+                "doc_id": batch.column("doc_id").take(docs[best]),
                 "sel_start": ls,
                 "sel_end": le,
                 "sel_text": [texts[d][s:e] for d, s, e in
                              zip(docs[best], ls, le)],
-            })[cols]
+            }
 
-    return assembled.select("doc_id", "plain_text", "pages").mapInPandas(
-        gen, schema=COORDS_TEXT_SCHEMA
+    return arrowmap.map_batches(
+        assembled.select("doc_id", "plain_text", "pages"), gen, COORDS_TEXT_SCHEMA
     )
 
 
 def with_char_boxes(assembled: DataFrame) -> DataFrame:
     """Append the full char-bbox array column (float32 rows of [x,y,w,h])."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            _, bb = _batch(pdf)
-            pdf = pdf.copy()
-            pdf["char_bboxes"] = [
-                bb.boxes[s:e].tolist()
-                for s, e in zip(bb.doc_off[:-1], bb.doc_off[1:])
-            ]
-            yield pdf[["doc_id", "char_bboxes"]]
+    def gen(batches):
+        for batch in batches:
+            _, bb = _batch(batch)
+            yield {
+                "doc_id": batch.column("doc_id"),
+                "char_bboxes": [
+                    bb.boxes[s:e].tolist()
+                    for s, e in zip(bb.doc_off[:-1], bb.doc_off[1:])
+                ],
+            }
 
-    boxed = assembled.select("doc_id", "plain_text", "pages").mapInPandas(
-        gen, schema="doc_id string, char_bboxes array<array<float>>"
+    boxed = arrowmap.map_batches(
+        assembled.select("doc_id", "plain_text", "pages"), gen,
+        "doc_id string, char_bboxes array<array<float>>",
     )
     return assembled.join(boxed, "doc_id")

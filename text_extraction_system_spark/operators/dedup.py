@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..core import spec
-from . import exprutil
+from . import arrowmap, exprutil
 
 #: buckets larger than this are dropped as degenerate (boilerplate shingles);
 #: a bucket of b docs yields b^2 pairs — this caps join blowup at scale
@@ -120,7 +120,6 @@ def signature_band_rows_arrow(
     import hashlib
 
     import numpy as np
-    import pandas as pd
 
     A = np.array(
         [((2 * p + 1) * spec.MINHASH_MULT) % spec.MINHASH_MOD for p in range(perms)],
@@ -131,9 +130,9 @@ def signature_band_rows_arrow(
 
     def gen(batches):
         cols = ["doc_id", "sig", "band", "band_sig"]
-        for pdf in batches:
+        for batch in batches:
             out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, text in zip(pdf[doc_id_col], pdf[text_col]):
+            for doc_id, text in arrowmap.rows(batch, doc_id_col, text_col):
                 hs_list = shingle_hash_set(text)
                 if not hs_list:
                     continue
@@ -149,18 +148,11 @@ def signature_band_rows_arrow(
                     out["sig"].append(sig)
                     out["band"].append(b)
                     out["band_sig"].append(bs)
-            # object dtype everywhere: a batch with no surviving docs would
-            # otherwise default to empty float64 columns, which Arrow cannot
-            # convert to list<int64>/string targets
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype=object) for k, v in out.items()},
-                columns=cols,
-            )
+            yield out
 
-    return docs.select(
-        F.col(doc_id_col).cast("string").alias(doc_id_col), text_col
-    ).mapInPandas(
-        gen, schema="doc_id string, sig array<bigint>, band int, band_sig string"
+    return arrowmap.map_batches(
+        docs.select(F.col(doc_id_col).cast("string").alias(doc_id_col), text_col),
+        gen, "doc_id string, sig array<bigint>, band int, band_sig string",
     )
 
 
@@ -168,32 +160,25 @@ def _shingle_hash_rows_arrow(docs: DataFrame, doc_id_col: str = "doc_id",
                              text_col: str = "text") -> DataFrame:
     """(doc_id, h, n_shingles) exploded distinct-shingle hash rows via one
     Arrow pass (the decontamination shape)."""
-    import pandas as pd
 
     def gen(batches):
-        for pdf in batches:
+        for batch in batches:
             ids: list = []
             hs: list = []
             ns: list = []
-            for doc_id, text in zip(pdf[doc_id_col], pdf[text_col]):
+            for doc_id, text in arrowmap.rows(batch, doc_id_col, text_col):
                 l = shingle_hash_set(text)
                 if not l:
                     continue
                 ids.extend([doc_id] * len(l))
                 hs.extend(l)
                 ns.extend([len(l)] * len(l))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype=object),
-                    "h": pd.Series(hs, dtype="int64"),
-                    "n_shingles": pd.Series(ns, dtype="int32"),
-                },
-                columns=["doc_id", "h", "n_shingles"],
-            )
+            yield {"doc_id": ids, "h": hs, "n_shingles": ns}
 
-    return docs.select(
-        F.col(doc_id_col).cast("string").alias(doc_id_col), text_col
-    ).mapInPandas(gen, schema="doc_id string, h bigint, n_shingles int")
+    return arrowmap.map_batches(
+        docs.select(F.col(doc_id_col).cast("string").alias(doc_id_col), text_col),
+        gen, "doc_id string, h bigint, n_shingles int",
+    )
 
 
 def doc_shingles(docs: DataFrame, doc_id_col: str = "doc_id",
@@ -207,15 +192,13 @@ def doc_shingles(docs: DataFrame, doc_id_col: str = "doc_id",
     slice+array_join HOF. Row-equal up to array order (pytest pins the
     jaccard consumers bit-equal)."""
     if vectorized:
-        import pandas as pd
-
         k = spec.SHINGLE_K
 
         def gen(batches):
-            for pdf in batches:
+            for batch in batches:
                 ids: list = []
                 sh: list = []
-                for doc_id, text in zip(pdf[doc_id_col], pdf[text_col]):
+                for doc_id, text in arrowmap.rows(batch, "doc_id", text_col):
                     words = [w for w in (text or "").split(" ") if w]
                     if len(words) < k:
                         continue
@@ -224,14 +207,12 @@ def doc_shingles(docs: DataFrame, doc_id_col: str = "doc_id",
                         " ".join(words[i:i + k])
                         for i in range(len(words) - k + 1)
                     }))
-                yield pd.DataFrame({
-                    "doc_id": pd.Series(ids, dtype=object),
-                    "shingles": pd.Series(sh, dtype=object),
-                }, columns=["doc_id", "shingles"])
+                yield {"doc_id": ids, "shingles": sh}
 
-        return docs.select(
-            F.col(doc_id_col).cast("string").alias("doc_id"), text_col
-        ).mapInPandas(gen, schema="doc_id string, shingles array<string>")
+        return arrowmap.map_batches(
+            docs.select(F.col(doc_id_col).cast("string").alias("doc_id"), text_col),
+            gen, "doc_id string, shingles array<string>",
+        )
     return docs.select(
         F.col(doc_id_col).cast("string").alias("doc_id"),
         shingles_col(F.col(text_col)).alias("shingles"),
@@ -498,16 +479,14 @@ def _doc_window_counts_arrow(docs: DataFrame, n: int, doc_id_col: str,
     import hashlib
     from collections import Counter
 
-    import pandas as pd
-
     from .textstats import py_tokens
 
     def gen(batches):
-        for pdf in batches:
+        for batch in batches:
             ids: list = []
             ws: list = []
             occ: list = []
-            for doc_id, text in zip(pdf[doc_id_col], pdf[text_col]):
+            for doc_id, text in arrowmap.rows(batch, doc_id_col, text_col):
                 toks = py_tokens(text)
                 m = len(toks) - n + 1
                 if m <= 0:
@@ -521,18 +500,12 @@ def _doc_window_counts_arrow(docs: DataFrame, n: int, doc_id_col: str,
                 ids.extend([doc_id] * len(cnt))
                 ws.extend(cnt.keys())
                 occ.extend(cnt.values())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype=object),
-                    "win": pd.Series(ws, dtype="int64"),
-                    "occ": pd.Series(occ, dtype="int64"),
-                },
-                columns=["doc_id", "win", "occ"],
-            )
+            yield {"doc_id": ids, "win": ws, "occ": occ}
 
-    return docs.select(
-        F.col(doc_id_col).cast("string").alias(doc_id_col), text_col
-    ).mapInPandas(gen, schema="doc_id string, win bigint, occ bigint")
+    return arrowmap.map_batches(
+        docs.select(F.col(doc_id_col).cast("string").alias(doc_id_col), text_col),
+        gen, "doc_id string, win bigint, occ bigint",
+    )
 
 
 def dup_window_coverage(docs: DataFrame, n: int = DUP_WINDOW_TOKENS,

@@ -6,7 +6,7 @@ DETERMINISTIC FAKE: the payload is a repetition of md5(media_ref) digest
 bytes, and "decoding" parses width/height/format out of the leading digest
 bytes. What is REAL and under test is the Spark-side plumbing: binary column
 synthesis in Catalyst expressions, Arrow transfer of binary batches through
-``mapInPandas``, schema and batch shape.
+the Arrow kernel helper (``arrowmap``), schema and batch shape.
 
 Real-deployment note: swap ``decode_media_batches`` internals for PIL/ffmpeg
 calls; signatures, schema, and partitioning stay identical.
@@ -16,10 +16,11 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import arrowmap
 from . import derive_spans as ds
 
 FORMATS = ("jpeg", "png", "tiff", "webp")
@@ -48,29 +49,32 @@ def media_table(docs: DataFrame) -> DataFrame:
     return media.withColumn("payload", media_payload_col(F.col("media_ref")))
 
 
-def decode_media_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def decode_media_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[dict]:
     """DETERMINISTIC FAKE decode: parses metadata from payload bytes.
 
     A real decoder (PIL.Image.open / av.open) would replace the body; the
     Arrow binary-batch plumbing is what this exercises.
     """
-    for pdf in batches:
-        out = {k: [] for k in ("doc_id", "media_ref", "n_bytes", "width", "height", "format")}
-        for doc_id, ref, payload in zip(pdf["doc_id"], pdf["media_ref"], pdf["payload"]):
+    for batch in batches:
+        out = {k: [] for k in ("n_bytes", "width", "height", "format")}
+        for payload in arrowmap.values(batch, "payload"):
             b = bytes(payload)
             head = b[:16]
-            out["doc_id"].append(doc_id)
-            out["media_ref"].append(ref)
             out["n_bytes"].append(len(b))
             out["width"].append(64 * (1 + (head[1] >> 4)))
             out["height"].append(64 * (1 + (head[1] & 15)))
             out["format"].append(FORMATS[(head[2] >> 4) % 4])
-        yield pd.DataFrame(out, columns=list(out.keys()))
+        yield {**_ids(batch), **out}
+
+
+def _ids(batch: pa.RecordBatch) -> dict[str, pa.Array]:
+    """The (doc_id, media_ref) key columns, passed through zero-copy."""
+    return {"doc_id": batch.column("doc_id"), "media_ref": batch.column("media_ref")}
 
 
 def decode_media(docs: DataFrame) -> DataFrame:
     """Binary payloads -> typed media metadata via Arrow batches."""
-    return media_table(docs).mapInPandas(decode_media_batches, schema=DECODED_SCHEMA)
+    return arrowmap.map_batches(media_table(docs), decode_media_batches, DECODED_SCHEMA)
 
 
 FEATURE_DIM = 16
@@ -86,23 +90,30 @@ def extract_features(docs: DataFrame) -> DataFrame:
     array<double> out."""
     import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def gen(batches):
+        for batch in batches:
             feats = []
-            for payload in pdf["payload"]:
+            for payload in arrowmap.values(batch, "payload"):
                 b = np.frombuffer(bytes(payload), dtype=np.uint8)
                 hist = np.bincount(b >> 4, minlength=FEATURE_DIM).astype(np.float64)
                 feats.append((hist / max(len(b), 1)).tolist())
-            out = pdf[["doc_id", "media_ref"]].copy()
-            out["feature"] = feats
-            yield out
+            yield {**_ids(batch), "feature": feats}
 
-    return media_table(docs).mapInPandas(gen, schema=FEATURES_SCHEMA)
+    return arrowmap.map_batches(media_table(docs), gen, FEATURES_SCHEMA)
 
 
 RESIZED_SCHEMA = (
     "doc_id string, media_ref string, width long, height long, payload binary"
 )
+
+
+def pil_image():
+    """``PIL.Image`` when importable, else None (the deterministic fakes)."""
+    try:
+        from PIL import Image  # pragma: no cover
+    except ImportError:
+        return None
+    return Image  # pragma: no cover
 
 
 def _resize_payload(b: bytes, target: int, image_mod=None) -> bytes:
@@ -136,22 +147,17 @@ def resize_media(docs: DataFrame, target: int = 64) -> DataFrame:
     byte-downsample fake runs. PIL's mere presence never changes a query
     from working to failing (round-2 verdict item 3)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        try:
-            from PIL import Image as image_mod  # pragma: no cover
-        except ImportError:
-            image_mod = None
-        for pdf in batches:
+    def gen(batches):
+        image_mod = pil_image()
+        for batch in batches:
             payloads = [
-                _resize_payload(bytes(p), target, image_mod) for p in pdf["payload"]
+                _resize_payload(bytes(p), target, image_mod)
+                for p in arrowmap.values(batch, "payload")
             ]
-            out = pdf[["doc_id", "media_ref"]].copy()
-            out["width"] = target
-            out["height"] = target
-            out["payload"] = payloads
-            yield out
+            yield {**_ids(batch), "width": [target] * len(payloads),
+                   "height": [target] * len(payloads), "payload": payloads}
 
-    return media_table(docs).mapInPandas(gen, schema=RESIZED_SCHEMA)
+    return arrowmap.map_batches(media_table(docs), gen, RESIZED_SCHEMA)
 
 
 FRAMES_SCHEMA = (
@@ -168,12 +174,12 @@ def sample_frames(docs: DataFrame, every: int = 2) -> DataFrame:
     shape a real decoder produces). Swap the slicing for av/ffmpeg frame
     iteration when the libs exist; schema and partitioning stay identical."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def gen(batches):
         cols = ["doc_id", "media_ref", "frame_idx", "frame"]
-        for pdf in batches:
+        for batch in batches:
             out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, ref, payload in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["payload"]
+            for doc_id, ref, payload in arrowmap.rows(
+                batch, "doc_id", "media_ref", "payload"
             ):
                 b = bytes(payload)
                 n_frames = len(b) // FRAME_BYTES
@@ -182,9 +188,9 @@ def sample_frames(docs: DataFrame, every: int = 2) -> DataFrame:
                     out["media_ref"].append(ref)
                     out["frame_idx"].append(i)
                     out["frame"].append(b[i * FRAME_BYTES:(i + 1) * FRAME_BYTES])
-            yield pd.DataFrame(out, columns=cols)
+            yield out
 
-    return media_table(docs).mapInPandas(gen, schema=FRAMES_SCHEMA)
+    return arrowmap.map_batches(media_table(docs), gen, FRAMES_SCHEMA)
 
 
 ROTATED_SCHEMA = (
@@ -219,6 +225,21 @@ def _rotate_payload(b: bytes, angle: float, image_mod=None) -> bytes:
         return b
     k = (len(b) * turns // 4) % len(b)
     return b[k:] + b[:k]
+
+
+def _rotate_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[dict]:
+    """(doc_id, media_ref, applied_angle, payload) -> the same rows with
+    each payload rotated by its applied_angle."""
+    image_mod = pil_image()
+    for batch in batches:
+        yield {
+            **_ids(batch),
+            "applied_angle": batch.column("applied_angle"),
+            "payload": [
+                _rotate_payload(bytes(p), float(a), image_mod)
+                for p, a in arrowmap.rows(batch, "payload", "applied_angle")
+            ],
+        }
 
 
 def rotate_media_inline(docs: DataFrame) -> DataFrame:
@@ -264,20 +285,7 @@ def rotate_media_inline(docs: DataFrame) -> DataFrame:
         media_payload_col(F.col("media_ref")).alias("payload"),
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        try:
-            from PIL import Image as image_mod  # pragma: no cover
-        except ImportError:
-            image_mod = None
-        for pdf in batches:
-            out = pdf[["doc_id", "media_ref", "applied_angle"]].copy()
-            out["payload"] = [
-                _rotate_payload(bytes(p), float(a), image_mod)
-                for p, a in zip(pdf["payload"], pdf["applied_angle"])
-            ]
-            yield out
-
-    return with_angle.mapInPandas(gen, schema=ROTATED_SCHEMA)
+    return arrowmap.map_batches(with_angle, _rotate_batches, ROTATED_SCHEMA)
 
 
 def rotate_media(docs: DataFrame, angles: DataFrame | None = None) -> DataFrame:
@@ -304,19 +312,7 @@ def rotate_media(docs: DataFrame, angles: DataFrame | None = None) -> DataFrame:
         "applied_angle", F.coalesce(F.col("detected_angle"), F.lit(0.0))
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        try:
-            from PIL import Image as image_mod  # pragma: no cover
-        except ImportError:
-            image_mod = None
-        for pdf in batches:
-            out = pdf[["doc_id", "media_ref", "applied_angle"]].copy()
-            out["payload"] = [
-                _rotate_payload(bytes(p), float(a), image_mod)
-                for p, a in zip(pdf["payload"], pdf["applied_angle"])
-            ]
-            yield out
-
-    return media.select(
-        "doc_id", "media_ref", "applied_angle", "payload"
-    ).mapInPandas(gen, schema=ROTATED_SCHEMA)
+    return arrowmap.map_batches(
+        media.select("doc_id", "media_ref", "applied_angle", "payload"),
+        _rotate_batches, ROTATED_SCHEMA,
+    )

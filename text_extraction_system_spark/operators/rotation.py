@@ -390,27 +390,23 @@ def detected_rotation_rows(docs: DataFrame) -> DataFrame:
     binary batches into ``detect_rotation``. On synthetic payloads this
     equals ``raw_angle_col`` exactly (pinned by pytest); with PIL and real
     images the pixel estimate takes over, plumbing unchanged."""
-    from collections.abc import Iterator
+    from . import arrowmap, multimodal
 
-    import pandas as pd
+    def gen(batches):
+        image_mod = multimodal.pil_image()
+        for batch in batches:
+            yield {
+                "doc_id": batch.column("doc_id"),
+                "media_ref": batch.column("media_ref"),
+                "raw_angle": [
+                    detect_rotation(ref, bytes(p), image_mod)
+                    for ref, p in arrowmap.rows(batch, "media_ref", "payload")
+                ],
+            }
 
-    from . import multimodal
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        try:
-            from PIL import Image as image_mod  # pragma: no cover
-        except ImportError:
-            image_mod = None
-        for pdf in batches:
-            out = pdf[["doc_id", "media_ref"]].copy()
-            out["raw_angle"] = [
-                detect_rotation(ref, bytes(p), image_mod)
-                for ref, p in zip(pdf["media_ref"], pdf["payload"])
-            ]
-            yield out
-
-    return multimodal.media_table(docs).mapInPandas(
-        gen, schema="doc_id string, media_ref string, raw_angle double"
+    return arrowmap.map_batches(
+        multimodal.media_table(docs), gen,
+        "doc_id string, media_ref string, raw_angle double",
     )
 
 

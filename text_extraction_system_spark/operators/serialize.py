@@ -6,7 +6,7 @@ the struct column stays native in the table; serialization is an OPTIONAL
 projection —
 
 * json      — ``F.to_json`` (JVM-side, codegen; the default)
-* msgpack   — Arrow-batched ``mapInPandas`` calling ``msgpack.packb`` when
+* msgpack   — an Arrow kernel (``arrowmap``) calling ``msgpack.packb`` when
   the wheel is installed, else the vendored spec-subset packer
   (``core.minipack`` — byte-identical for the DTO types), so the binary
   path always runs in CI
@@ -20,10 +20,11 @@ projection —
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, StructField, StructType
+
+from . import arrowmap
 
 try:  # optional dependency; the vendored packer is the fallback
     import msgpack  # type: ignore
@@ -43,28 +44,33 @@ def to_json_column(results: DataFrame, struct_col: str = "structure") -> DataFra
     return results.withColumn(f"{struct_col}_json", F.to_json(F.col(struct_col)))
 
 
-def to_msgpack_column(results: DataFrame, struct_col: str = "structure") -> DataFrame:
-    """Append ``<struct_col>_msgpack`` (binary) via Arrow batches."""
-    import pandas as pd
-
-    from pyspark.sql.types import BinaryType, StructField, StructType
-
-    out_cols = [f.name for f in results.schema.fields] + [f"{struct_col}_msgpack"]
+def _append_binary(results: DataFrame, out_name: str, encode) -> DataFrame:
+    """``results`` plus a binary column ``out_name``: ``encode(batch)``
+    gives one blob per row; the input columns pass through untouched."""
     # build a NEW StructType: StructType.add mutates in place, which would
     # corrupt the input DataFrame's cached schema
     schema = StructType(
-        list(results.schema.fields)
-        + [StructField(f"{struct_col}_msgpack", BinaryType())]
+        list(results.schema.fields) + [StructField(out_name, BinaryType())]
     )
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            pdf[f"{struct_col}_msgpack"] = [
-                _packb(v, use_single_float=True) for v in pdf[struct_col]
-            ]
-            yield pdf[out_cols]
+    def gen(batches):
+        for batch in batches:
+            yield {**dict(zip(batch.schema.names, batch.columns)),
+                   out_name: encode(batch)}
 
-    return results.mapInPandas(gen, schema=schema)
+    return arrowmap.map_batches(results, gen, schema)
+
+
+def to_msgpack_column(results: DataFrame, struct_col: str = "structure") -> DataFrame:
+    """Append ``<struct_col>_msgpack`` (binary) via Arrow batches."""
+
+    def encode(batch):
+        return [
+            _packb(v, use_single_float=True)
+            for v in arrowmap.values(batch, struct_col)
+        ]
+
+    return _append_binary(results, f"{struct_col}_msgpack", encode)
 
 
 def to_protobuf_column(results: DataFrame, struct_col: str = "structure",
@@ -72,38 +78,28 @@ def to_protobuf_column(results: DataFrame, struct_col: str = "structure",
                        toc_col: str | None = "table_of_contents") -> DataFrame:
     """Append ``<struct_col>_proto`` (binary): the reference's ``Pages``
     contract message (contract_pages.proto) via Arrow batches and the
-    vendored proto2 encoder. Same mapInPandas shape as the msgpack sink.
+    vendored proto2 encoder. Same Arrow-kernel shape as the msgpack sink.
     When a ``toc_col`` array column is present (e.g. the toc operator's rows
     collected per doc), its items are emitted as ``table_of_contents``
     (field 7) alongside the structure's own segments."""
-    import pandas as pd
-
-    from pyspark.sql.types import BinaryType, StructField, StructType
-
     from ..core import miniproto
 
-    out_name = f"{struct_col}_proto"
-    out_cols = [f.name for f in results.schema.fields] + [out_name]
-    schema = StructType(
-        list(results.schema.fields) + [StructField(out_name, BinaryType())]
-    )
     has_pages = pages_col is not None and pages_col in results.columns
     has_toc = toc_col is not None and toc_col in results.columns
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            pages_iter = pdf[pages_col] if has_pages else [()] * len(pdf)
-            toc_iter = pdf[toc_col] if has_toc else [None] * len(pdf)
-            blobs = []
-            for s, p, t in zip(pdf[struct_col], pages_iter, toc_iter):
-                if t is not None and len(t):
-                    s = dict(s)
-                    s["table_of_contents"] = t
-                blobs.append(miniproto.encode_pages(s, p if p is not None else ()))
-            pdf[out_name] = blobs
-            yield pdf[out_cols]
+    def encode(batch):
+        n = batch.num_rows
+        pages_iter = arrowmap.values(batch, pages_col) if has_pages else [()] * n
+        toc_iter = arrowmap.values(batch, toc_col) if has_toc else [None] * n
+        blobs = []
+        for s, p, t in zip(arrowmap.values(batch, struct_col), pages_iter, toc_iter):
+            if t is not None and len(t):
+                s = dict(s)
+                s["table_of_contents"] = t
+            blobs.append(miniproto.encode_pages(s, p if p is not None else ()))
+        return blobs
 
-    return results.mapInPandas(gen, schema=schema)
+    return _append_binary(results, f"{struct_col}_proto", encode)
 
 
 def to_char_bboxes_proto_column(results: DataFrame,
@@ -112,24 +108,12 @@ def to_char_bboxes_proto_column(results: DataFrame,
     leg (``contract_char_bboxes.proto`` CharBboxes, encoded at
     ``tasks.py:490-508``) from the ``coords.with_char_boxes`` array column.
     The reference DTO always serializes with ``__initialised__=True``."""
-    import pandas as pd
-
-    from pyspark.sql.types import BinaryType, StructField, StructType
-
     from ..core import miniproto
 
-    out_name = f"{bboxes_col}_proto"
-    out_cols = [f.name for f in results.schema.fields] + [out_name]
-    schema = StructType(
-        list(results.schema.fields) + [StructField(out_name, BinaryType())]
-    )
+    def encode(batch):
+        return [
+            miniproto.encode_char_bboxes(b, initialised=True)
+            for b in arrowmap.values(batch, bboxes_col)
+        ]
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            pdf[out_name] = [
-                miniproto.encode_char_bboxes(b, initialised=True)
-                for b in pdf[bboxes_col]
-            ]
-            yield pdf[out_cols]
-
-    return results.mapInPandas(gen, schema=schema)
+    return _append_binary(results, f"{bboxes_col}_proto", encode)

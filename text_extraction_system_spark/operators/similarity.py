@@ -16,6 +16,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from . import arrowmap
+
 _HEX = "0123456789abcdef"
 
 
@@ -106,7 +108,6 @@ def _scored_topk_partials(
     ``probe_cells`` maps query_id -> cell ids the query probes (None = scan
     everything, the brute-force shape)."""
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     in_fields = {f.name: f for f in cands.schema.fields}
@@ -132,12 +133,11 @@ def _scored_topk_partials(
         best_cos = [[] for _ in range(m)]
         dim = qvs[0].shape[0] if m else 0
         Q = np.stack(qvs) if m else np.zeros((0, dim))
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf["cand_id"].to_numpy()
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["cv"]])
-            cells = pdf["cell"].to_numpy() if has_cell else None
+        for batch in batches:
+            ids = batch.column("cand_id").to_numpy(zero_copy_only=False)
+            X = arrowmap.vectors(batch.column("cv"))
+            cells = (batch.column("cell").to_numpy(zero_copy_only=False)
+                     if has_cell else None)
             # candidate norms + all dots, dim-major (the fold's add order)
             nacc = np.zeros(len(X))
             dacc = np.zeros((len(X), m))
@@ -177,9 +177,9 @@ def _scored_topk_partials(
                 out["query_id"].append(qids[qi])
                 out["cand_id"].append(best_id[qi][t])
                 out["cosine"].append(best_cos[qi][t])
-        yield pd.DataFrame(out, columns=["query_id", "cand_id", "cosine"])
+        yield out
 
-    return cands.mapInPandas(gen, schema=out_schema)
+    return arrowmap.map_batches(cands, gen, out_schema)
 
 
 def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -202,7 +202,7 @@ def brute_force_topk(
     """Exact top-k cosine neighbors for the first ``n_queries`` vectors.
 
     ``vectorized=True`` (default): the query vectors ride inside a numpy
-    ``mapInPandas`` kernel (n_queries x dim floats — the centroid-collect
+    Arrow kernel (n_queries x dim floats — the centroid-collect
     class, never the corpus) that scores each task's rows in one vectorized
     pass per batch and emits per-task partial top-k, so only
     n_tasks x n_queries x k rows reach the ranking window — the interpreted
@@ -336,28 +336,25 @@ def _srp_buckets_arr_vectorized(
 
     def gen(batches):
         P = np.asarray(planes, dtype=np.float64)  # (n_planes, dim), exact
-        for pdf in batches:
-            if len(pdf) == 0:
-                out = pdf[sel].copy()
-                out["buckets"] = []
-                yield out
-                continue
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+        for batch in batches:
+            X = arrowmap.vectors(batch.column(vec_col))
             acc = np.zeros((X.shape[0], P.shape[0]))
             for j in range(P.shape[1]):  # dim-major: the fold's add order
                 acc += X[:, j : j + 1] * P[None, :, j]
             bits = np.where(acc >= 0, "1", "0")  # (n, n_planes) of '0'/'1'
-            out = pdf[sel].copy()
-            out["buckets"] = [
-                [
-                    "".join(row[b * planes_per_band : (b + 1) * planes_per_band])
-                    for b in range(n_bands)
-                ]
-                for row in bits
-            ]
-            yield out
+            yield {
+                id_col: batch.column(id_col),
+                vec_col: batch.column(vec_col),
+                "buckets": [
+                    [
+                        "".join(row[b * planes_per_band : (b + 1) * planes_per_band])
+                        for b in range(n_bands)
+                    ]
+                    for row in bits
+                ],
+            }
 
-    res = embeddings.select(*sel).mapInPandas(gen, schema=out_schema)
+    res = arrowmap.map_batches(embeddings.select(*sel), gen, out_schema)
     if not keep_vec:
         res = res.drop(vec_col)
     return res
@@ -751,7 +748,7 @@ def assign_cells_vectorized(
     rounding order, same first-index argmin tie-break. Pinned by
     tests/test_plans.py (exact per-row cell equality on the sf corpus).
 
-    Returns (id_col, vec_col, cell) via one Arrow ``mapInPandas`` pass —
+    Returns (id_col, vec_col, cell) via one Arrow kernel pass —
     narrow, no shuffle; partitionBy("cell") downstream is the 10^12-row
     materialization strategy."""
     import numpy as np
@@ -770,22 +767,19 @@ def assign_cells_vectorized(
     def gen(batches):
         C = np.asarray(cents, dtype=np.float64)  # (k, dim), exact
         c2 = np.asarray(c2_list, dtype=np.float64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pdf.assign(cell=np.array([], dtype=np.int32))
-                continue
-            X = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )  # float32 -> double is exact
+        for batch in batches:
+            X = arrowmap.vectors(batch.column(vec_col))  # float32 -> double is exact
             acc = np.zeros((X.shape[0], C.shape[0]))
             for j in range(C.shape[1]):  # dim-major: the fold's add order
                 acc += X[:, j : j + 1] * C[None, :, j]
             d = c2[None, :] - 2.0 * acc
-            out = pdf[[id_col, vec_col]].copy()
-            out["cell"] = np.argmin(d, axis=1).astype(np.int32)
-            yield out
+            yield {
+                id_col: batch.column(id_col),
+                vec_col: batch.column(vec_col),
+                "cell": np.argmin(d, axis=1).astype(np.int32),
+            }
 
-    return embeddings.select(id_col, vec_col).mapInPandas(gen, schema=out_schema)
+    return arrowmap.map_batches(embeddings.select(id_col, vec_col), gen, out_schema)
 
 
 def ivf_topk(
@@ -821,7 +815,7 @@ def ivf_topk(
 
     cells_lit = _ivf_cells_lit(dim, n_centroids, centroids)
     if vectorized:
-        # production assignment: numpy mapInPandas, bit-identical to the
+        # production assignment: numpy Arrow kernel, bit-identical to the
         # HOF (see assign_cells_vectorized) — keeps the oracle green while
         # dropping the interpreted 64x64 expression from the hot path
         base = assign_cells_vectorized(
@@ -1019,6 +1013,13 @@ def pq_train(
     return books
 
 
+def _vid_vec(embeddings: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(vid bigint, vec): the PQ encoders' input, id typed as their output."""
+    return embeddings.select(
+        F.col(id_col).cast("bigint").alias("vid"), F.col(vec_col).alias("vec")
+    )
+
+
 def pq_encode(
     embeddings: DataFrame,
     codebooks: list[list[list[float]]],
@@ -1037,18 +1038,10 @@ def pq_encode(
     sub = len(codebooks[0][0])
 
     def gen(batches):
-        import pandas as pd
-
         C = [np.asarray(cb, dtype=np.float64) for cb in codebooks]   # (k, sub)
         c2 = [np.asarray([sum(v * v for v in cv) for cv in cb]) for cb in codebooks]
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame({
-                    "vid": pd.Series([], dtype=object),
-                    "codes": pd.Series([], dtype=object),
-                })
-                continue
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+        for batch in batches:
+            X = arrowmap.vectors(batch.column("vec"))
             codes = np.empty((X.shape[0], m), dtype=np.int32)
             for b in range(m):
                 Xb = X[:, b * sub:(b + 1) * sub]
@@ -1056,13 +1049,11 @@ def pq_encode(
                 for j in range(sub):  # dim-major: the fold's add order
                     acc += Xb[:, j:j + 1] * C[b][None, :, j]
                 codes[:, b] = np.argmin(c2[b][None, :] - 2.0 * acc, axis=1)
-            out = pdf[[id_col]].copy()
-            out.columns = ["vid"]
-            out["codes"] = [list(map(int, row)) for row in codes]
-            yield out
+            yield {"vid": batch.column("vid"),
+                   "codes": [list(map(int, row)) for row in codes]}
 
-    return embeddings.select(id_col, vec_col).mapInPandas(
-        gen, schema="vid bigint, codes array<int>"
+    return arrowmap.map_batches(
+        _vid_vec(embeddings, id_col, vec_col), gen, "vid bigint, codes array<int>"
     )
 
 
@@ -1081,7 +1072,6 @@ def pq_assign_encode(
     originals bit-exactly (same dim-major folds, same literal c2 sums);
     pinned row-equal to the join form by pytest."""
     import numpy as np
-    import pandas as pd
 
     m = len(codebooks)
     sub = dim // m
@@ -1092,10 +1082,8 @@ def pq_assign_encode(
         cc2 = np.asarray(c2_cells)
         C = [np.asarray(cb, dtype=np.float64) for cb in codebooks]
         c2 = [np.asarray([sum(v * v for v in cv) for cv in cb]) for cb in codebooks]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+        for batch in batches:
+            X = arrowmap.vectors(batch.column("vec"))
             acc = np.zeros((X.shape[0], CC.shape[0]))
             for j in range(dim):
                 acc += X[:, j:j + 1] * CC[None, :, j]
@@ -1107,14 +1095,12 @@ def pq_assign_encode(
                 for j in range(sub):
                     a += Xb[:, j:j + 1] * C[b][None, :, j]
                 codes[:, b] = np.argmin(c2[b][None, :] - 2.0 * a, axis=1)
-            out = pdf[[id_col]].copy()
-            out.columns = ["vid"]
-            out["cell"] = cells
-            out["codes"] = [list(map(int, row)) for row in codes]
-            yield out
+            yield {"vid": batch.column("vid"), "cell": cells,
+                   "codes": [list(map(int, row)) for row in codes]}
 
-    return embeddings.select(id_col, vec_col).mapInPandas(
-        gen, schema="vid bigint, cell int, codes array<int>"
+    return arrowmap.map_batches(
+        _vid_vec(embeddings, id_col, vec_col), gen,
+        "vid bigint, cell int, codes array<int>",
     )
 
 
@@ -1145,7 +1131,6 @@ def _adc_topk_partials(
     k best (adc ASC, cand_id ASC) reach the ranking window. ``queries``
     is [(query_id, tab_list)]; ``cands`` is (cand_id, codes[, cell])."""
     import numpy as np
-    import pandas as pd
 
     qids = [q[0] for q in queries]
     tabs = [np.asarray(q[1]) for q in queries]
@@ -1159,12 +1144,11 @@ def _adc_topk_partials(
     def gen(batches):
         best_key = [np.empty(0)] * nq
         best_id = [np.empty(0, dtype=np.int64)] * nq
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf["cand_id"].to_numpy()
-            codes = np.stack([np.asarray(c, dtype=np.int64) for c in pdf["codes"]])
-            cells = pdf["cell"].to_numpy() if has_cell else None
+        for batch in batches:
+            ids = batch.column("cand_id").to_numpy(zero_copy_only=False)
+            codes = arrowmap.vectors(batch.column("codes"), np.int64)
+            cells = (batch.column("cell").to_numpy(zero_copy_only=False)
+                     if has_cell else None)
             for qi in range(nq):
                 mask = ids != qids[qi]
                 if cells is not None and probes is not None:
@@ -1189,10 +1173,10 @@ def _adc_topk_partials(
                 out["query_id"].append(qids[qi])
                 out["cand_id"].append(int(best_id[qi][t_]))
                 out["adc_dist"].append(float(best_key[qi][t_]))
-        yield pd.DataFrame(out, columns=["query_id", "cand_id", "adc_dist"])
+        yield out
 
-    return cands.mapInPandas(
-        gen, schema="query_id bigint, cand_id bigint, adc_dist double"
+    return arrowmap.map_batches(
+        cands, gen, "query_id bigint, cand_id bigint, adc_dist double"
     )
 
 

@@ -21,6 +21,7 @@ from pyspark.sql.functions import pandas_udf
 
 from .. import schemas
 from ..core import langid, textseg
+from . import arrowmap
 
 
 def _structure_of(text: str, force_language: str | None = None) -> dict:
@@ -84,7 +85,7 @@ _PARAGRAPH_ROWS_SCHEMA = (
 
 
 def paragraph_rows(assembled: DataFrame, text_col: str = "plain_text") -> DataFrame:
-    """Row-per-paragraph segmentation via ``mapInPandas``.
+    """Row-per-paragraph segmentation via an Arrow kernel (``arrowmap``).
 
     A generator (``explode``) cannot host a pandas-UDF result in its input
     expression tree, so queries that need exploded structure use this plan
@@ -93,9 +94,9 @@ def paragraph_rows(assembled: DataFrame, text_col: str = "plain_text") -> DataFr
     """
 
     def gen(batches):
-        for pdf in batches:
+        for batch in batches:
             out = {"doc_id": [], "par_start": [], "par_end": [], "language": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
+            for doc_id, text in arrowmap.rows(batch, "doc_id", text_col):
                 t = text if text is not None else ""
                 lang = langid.LangIndex(t).lang
                 for s, e in textseg.paragraph_spans(t):
@@ -103,10 +104,10 @@ def paragraph_rows(assembled: DataFrame, text_col: str = "plain_text") -> DataFr
                     out["par_start"].append(s)
                     out["par_end"].append(e)
                     out["language"].append(lang(s, e))
-            yield pd.DataFrame(out, columns=list(out.keys()))
+            yield out
 
-    return assembled.select("doc_id", text_col).mapInPandas(
-        gen, schema=_PARAGRAPH_ROWS_SCHEMA
+    return arrowmap.map_batches(
+        assembled.select("doc_id", text_col), gen, _PARAGRAPH_ROWS_SCHEMA
     )
 
 
@@ -116,12 +117,12 @@ _SENTENCE_ROWS_SCHEMA = (
 
 
 def sentence_rows(assembled: DataFrame, text_col: str = "plain_text") -> DataFrame:
-    """Row-per-sentence segmentation (W1) via ``mapInPandas``."""
+    """Row-per-sentence segmentation (W1) via an Arrow kernel."""
 
     def gen(batches):
-        for pdf in batches:
+        for batch in batches:
             out = {"doc_id": [], "sent_start": [], "sent_end": [], "language": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
+            for doc_id, text in arrowmap.rows(batch, "doc_id", text_col):
                 t = text if text is not None else ""
                 lang = langid.LangIndex(t).lang
                 for s, e in textseg.sentence_spans(t):
@@ -129,10 +130,10 @@ def sentence_rows(assembled: DataFrame, text_col: str = "plain_text") -> DataFra
                     out["sent_start"].append(s)
                     out["sent_end"].append(e)
                     out["language"].append(lang(s, e))
-            yield pd.DataFrame(out, columns=list(out.keys()))
+            yield out
 
-    return assembled.select("doc_id", text_col).mapInPandas(
-        gen, schema=_SENTENCE_ROWS_SCHEMA
+    return arrowmap.map_batches(
+        assembled.select("doc_id", text_col), gen, _SENTENCE_ROWS_SCHEMA
     )
 
 
@@ -143,20 +144,20 @@ _SECTION_ROWS_SCHEMA = (
 
 
 def section_rows(assembled: DataFrame, text_col: str = "plain_text") -> DataFrame:
-    """Row-per-section heading detection (W3/J8) via ``mapInPandas``."""
+    """Row-per-section heading detection (W3/J8) via an Arrow kernel."""
 
     def gen(batches):
         cols = ["doc_id", "start", "end", "title", "title_start", "title_end", "level"]
-        for pdf in batches:
+        for batch in batches:
             out = {k: [] for k in cols}
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
+            for doc_id, text in arrowmap.rows(batch, "doc_id", text_col):
                 t = text if text is not None else ""
                 for sec in textseg.detect_sections(t):
                     out["doc_id"].append(doc_id)
                     for k in cols[1:]:
                         out[k].append(sec[k])
-            yield pd.DataFrame(out, columns=cols)
+            yield out
 
-    return assembled.select("doc_id", text_col).mapInPandas(
-        gen, schema=_SECTION_ROWS_SCHEMA
+    return arrowmap.map_batches(
+        assembled.select("doc_id", text_col), gen, _SECTION_ROWS_SCHEMA
     )

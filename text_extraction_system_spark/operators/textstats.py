@@ -15,6 +15,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..core import spec
+from . import arrowmap
 
 _HEX = "0123456789abcdef"
 
@@ -316,15 +317,12 @@ def simhash_rows(docs, doc_id_col: str = "doc_id", text_col: str = "text",
     import hashlib
 
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F  # noqa: F811 (local, for select)
 
     def gen(batches):
         shifts = np.arange(bits, dtype=np.uint64)
-        for pdf in batches:
-            ids: list = []
+        for batch in batches:
             vals: list = []
-            for doc_id, text in zip(pdf[doc_id_col], pdf[text_col]):
+            for text in arrowmap.values(batch, text_col):
                 toks = py_tokens(text)
                 if toks:
                     H = np.fromiter(
@@ -337,16 +335,13 @@ def simhash_rows(docs, doc_id_col: str = "doc_id", text_col: str = "text",
                     sim = int(((votes > 0).astype(np.uint64) << shifts).sum())
                 else:
                     sim = 0  # the fold over zero hashes leaves every vote 0
-                ids.append(doc_id)
                 vals.append(sim)
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids, dtype=object),
-                "simhash": pd.Series(vals, dtype="int64"),
-            })
+            yield {"doc_id": batch.column(doc_id_col), "simhash": vals}
 
-    return docs.select(
-        F.col(doc_id_col).cast("string").alias(doc_id_col), text_col
-    ).mapInPandas(gen, schema="doc_id string, simhash bigint")
+    return arrowmap.map_batches(
+        docs.select(F.col(doc_id_col).cast("string").alias(doc_id_col), text_col),
+        gen, "doc_id string, simhash bigint",
+    )
 
 
 def repetition_rows_arrow(assembled, text_col: str = "plain_text"):
@@ -365,7 +360,6 @@ def repetition_rows_arrow(assembled, text_col: str = "plain_text"):
     size carry None for that column."""
     from collections import Counter
 
-    import pandas as pd
 
     frac_cols = (
         [f"top_{n}gram_char_frac" for n in TOP_NS[1:]]
@@ -448,9 +442,9 @@ def repetition_rows_arrow(assembled, text_col: str = "plain_text"):
                 prev = inverse
             return top_gram2, tops, dups
 
-        for pdf in batches:
+        for batch in batches:
             out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
+            for doc_id, text in arrowmap.rows(batch, "doc_id", text_col):
                 lines = [x for x in (text or "").replace("\f", "").split("\n") if x]
                 toks = py_tokens(text)
                 if not lines or len(toks) < 2:
@@ -479,21 +473,14 @@ def repetition_rows_arrow(assembled, text_col: str = "plain_text"):
                     out[f"top_{n}gram_char_frac"].append(tops.get(n))
                 for n in DUP_NS:
                     out[f"dup_{n}gram_char_frac"].append(dups.get(n))
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype=(object if k in ("doc_id", "top_gram")
-                                        or k in frac_cols
-                                        else "int64" if k == "n_lines"
-                                        else "float64"))
-                 for k, v in out.items()},
-                columns=cols,
-            )
+            yield out
 
     frac_schema = ", ".join(f"{c} double" for c in frac_cols)
-    return assembled.select("doc_id", text_col).mapInPandas(
-        gen,
-        schema="doc_id string, n_lines bigint, dup_line_frac double, "
-               "dup_line_char_frac double, top_gram string, "
-               "top_gram_char_frac double, " + frac_schema,
+    return arrowmap.map_batches(
+        assembled.select("doc_id", text_col), gen,
+        "doc_id string, n_lines bigint, dup_line_frac double, "
+        "dup_line_char_frac double, top_gram string, "
+        "top_gram_char_frac double, " + frac_schema,
     )
 
 
@@ -507,30 +494,22 @@ def _doc_token_counts_arrow(docs, doc_id_col: str, text_col: str):
     inner-join semantics). Pinned row-equal by pytest."""
     from collections import Counter
 
-    import pandas as pd
-
     def gen(batches):
-        for pdf in batches:
+        for batch in batches:
             ids: list = []
             toks: list = []
             tfs: list = []
-            for doc_id, text in zip(pdf[doc_id_col], pdf[text_col]):
+            for doc_id, text in arrowmap.rows(batch, doc_id_col, text_col):
                 cnt = Counter(py_tokens(text))
                 ids.extend([doc_id] * len(cnt))
                 toks.extend(cnt.keys())
                 tfs.extend(cnt.values())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype=object),
-                    "token": pd.Series(toks, dtype=object),
-                    "tf": pd.Series(tfs, dtype="int64"),
-                },
-                columns=["doc_id", "token", "tf"],
-            )
+            yield {"doc_id": ids, "token": toks, "tf": tfs}
 
-    return docs.select(
-        F.col(doc_id_col).cast("string").alias(doc_id_col), text_col
-    ).mapInPandas(gen, schema="doc_id string, token string, tf bigint")
+    return arrowmap.map_batches(
+        docs.select(F.col(doc_id_col).cast("string").alias(doc_id_col), text_col),
+        gen, "doc_id string, token string, tf bigint",
+    )
 
 
 def tfidf_keywords(docs, k: int = 3, doc_id_col: str = "doc_id",

@@ -11,7 +11,7 @@ outline exists") anchor one entry per page through the char-coordinate map
 (``core.charboxes`` + ``core.geometry.anchor_toc_sections``); the rest fall
 back to ``textseg.detect_sections`` over the extracted plain text.
 
-Scale shape: one Arrow ``mapInPandas`` over the assembled results — no
+Scale shape: one Arrow kernel (``arrowmap``) over the assembled results — no
 shuffle, no driver-side state; the char-box array is built per doc inside
 the batch and discarded.
 """
@@ -20,10 +20,10 @@ from __future__ import annotations
 
 import hashlib
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..core import charboxes, geometry, textseg
+from . import arrowmap
 
 _SCHEMA = "doc_id string, start long, end long, title string, level long, source string"
 
@@ -72,10 +72,10 @@ def toc_section_rows(res: DataFrame) -> DataFrame:
 
     def gen(batches):
         cols = ["doc_id", "start", "end", "title", "level", "source"]
-        for pdf in batches:
+        for batch in batches:
             out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, text, pages in zip(
-                pdf["doc_id"], pdf["plain_text"], pdf["pages"]
+            for doc_id, text, pages in arrowmap.rows(
+                batch, "doc_id", "plain_text", "pages"
             ):
                 t = text if text is not None else ""
                 pg = list(pages) if pages is not None else []
@@ -87,6 +87,8 @@ def toc_section_rows(res: DataFrame) -> DataFrame:
                     out["title"].append(s["title"])
                     out["level"].append(int(s["level"]))
                     out["source"].append(s["source"])
-            yield pd.DataFrame(out, columns=cols)
+            yield out
 
-    return res.select("doc_id", "plain_text", "pages").mapInPandas(gen, schema=_SCHEMA)
+    return arrowmap.map_batches(
+        res.select("doc_id", "plain_text", "pages"), gen, _SCHEMA
+    )

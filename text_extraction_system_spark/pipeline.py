@@ -19,108 +19,38 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import schemas
+from .operators import arrowmap, layout, restitch, structure
 from .operators import derive_spans as ds
-from .operators import layout, restitch, structure
 
 
-def _results_schema(with_structure: bool) -> T.StructType:
-    fields = [
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("needs_ocr", T.BooleanType()),
-        T.StructField("parse_failures", T.ArrayType(T.StringType())),
-        T.StructField("out_spans", T.ArrayType(schemas.SPAN)),
-        T.StructField("plain_text", T.StringType()),
-        T.StructField("pages", T.ArrayType(schemas.PAGE)),
-    ]
-    if with_structure:
-        fields.append(T.StructField("structure", schemas.STRUCTURE))
-    return T.StructType(fields)
-
-
-def _extract_documents_arrow(
-    docs: DataFrame,
-    doc_id_col: str,
-    text_col: str,
-    with_structure: bool,
-) -> DataFrame:
-    """Arrow extraction kernel: one vectorized pass per batch running the
-    per-document reference semantics (``core.oracle`` — the same module
-    every correctness test pins the Catalyst path against) plus the
-    engine's own structure segmentation (``structure._structure_of``, the
-    function the structure pandas_udf calls). VALUE-IDENTICAL to the
-    Catalyst formulation by construction and pinned row-for-row by pytest.
-    Measured SLOWER than the expression pipeline (see extract_from_documents)
-    — kept as the alternative engine and the runnable reference shape, not
-    the default."""
-    import pandas as pd
-
-    out_schema = _results_schema(with_structure)
-    cols = [f.name for f in out_schema.fields]
-
-    def gen(batches):
-        from .core import oracle
-
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, text in zip(pdf[doc_id_col], pdf[text_col]):
-                ex = oracle.extract(str(doc_id), text or "")
-                out["doc_id"].append(ex.doc_id)
-                out["needs_ocr"].append(ex.needs_ocr)
-                out["parse_failures"].append(ex.parse_failures)
-                out["out_spans"].append([
-                    {"kind": s.kind, "text": s.text,
-                     "media_ref": s.media_ref, "offset": s.offset}
-                    for s in ex.out_spans
-                ])
-                out["plain_text"].append(ex.plain_text)
-                out["pages"].append(ex.pages)
-                if with_structure:
-                    out["structure"].append(structure._structure_of(ex.plain_text))
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype=object) for k, v in out.items()},
-                columns=cols,
-            )
-
-    return docs.select(
-        F.col(doc_id_col).cast("string").alias(doc_id_col), text_col
-    ).mapInPandas(gen, schema=out_schema)
+_RESULTS_SCHEMA = T.StructType([
+    T.StructField("doc_id", T.StringType()),
+    T.StructField("needs_ocr", T.BooleanType()),
+    T.StructField("parse_failures", T.ArrayType(T.StringType())),
+    T.StructField("out_spans", T.ArrayType(schemas.SPAN)),
+    T.StructField("plain_text", T.StringType()),
+    T.StructField("pages", T.ArrayType(schemas.PAGE)),
+    T.StructField("structure", schemas.STRUCTURE),
+])
 
 
 def _extract_documents_arrow_native(
-    docs: DataFrame,
-    doc_id_col: str,
-    text_col: str,
-    with_structure: bool,
+    docs: DataFrame, doc_id_col: str, text_col: str
 ) -> DataFrame:
-    """``mapInArrow`` extraction kernel (r6): the same per-document
-    ``core.oracle`` semantics as ``_extract_documents_arrow``, but the
-    nested output columns (out_spans, pages, structure) are built as
-    pyarrow arrays from flat child buffers + offset vectors instead of
-    pandas object Series of dicts — the pandas→Arrow conversion of nested
-    python objects was the measured majority of the old kernel's cost
-    (13.2 s vs catalyst 8.8 s on an 800k-doc corpus; this kernel: see
+    """Arrow extraction kernel (r6): per document, the ``core.oracle``
+    semantics (derive -> OCR decide -> restitch -> assemble) plus the
+    engine's structure segmentation (``structure._structure_of``), in one
+    Python pass per batch. The nested output columns (out_spans, pages,
+    structure) are built as pyarrow arrays from flat child buffers + offset
+    vectors, not from python objects per row: converting nested python
+    objects was the measured majority of an earlier pandas-object kernel's
+    cost (13.2 s vs catalyst 8.8 s on an 800k-doc corpus; this kernel: see
     OPTIMIZATION_r06.md). Value-identical by construction: every field
     comes from the exact oracle/struct code the pytest fixtures pin."""
     import numpy as np
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
 
     from .core import oracle
-
-    def _nullable(dt: T.DataType) -> T.DataType:
-        # pyarrow builders emit nullable arrays; declare the kernel's output
-        # schema nullable throughout (metadata-only — no value changes) so
-        # no non-nullable cast is needed on the Arrow side
-        if isinstance(dt, T.StructType):
-            return T.StructType([
-                T.StructField(f.name, _nullable(f.dataType), True) for f in dt.fields
-            ])
-        if isinstance(dt, T.ArrayType):
-            return T.ArrayType(_nullable(dt.elementType), True)
-        return dt
-
-    out_schema = _nullable(_results_schema(with_structure))
-    arrow_schema = to_arrow_schema(out_schema)
 
     def gen(batches):
         for batch in batches:
@@ -163,21 +93,20 @@ def _extract_documents_arrow_native(
                     p_num.append(p["number"]); p_start.append(p["start"])
                     p_end.append(p["end"])
                 p_off[i + 1] = len(p_num)
-                if with_structure:
-                    st = structure._structure_of(ptext)
-                    st_title.append(st["title"]); st_lang.append(st["language"])
-                    for q in st["paragraphs"]:
-                        para_s.append(q["start"]); para_e.append(q["end"])
-                        para_l.append(q["language"])
-                    para_off[i + 1] = len(para_s)
-                    for q in st["sentences"]:
-                        sent_s.append(q["start"]); sent_e.append(q["end"])
-                        sent_l.append(q["language"])
-                    sent_off[i + 1] = len(sent_s)
-                    for q in st["sections"]:
-                        for k in sec_cols:
-                            sec_cols[k].append(q[k])
-                    sec_off[i + 1] = len(sec_cols["start"])
+                st = structure._structure_of(ptext)
+                st_title.append(st["title"]); st_lang.append(st["language"])
+                for q in st["paragraphs"]:
+                    para_s.append(q["start"]); para_e.append(q["end"])
+                    para_l.append(q["language"])
+                para_off[i + 1] = len(para_s)
+                for q in st["sentences"]:
+                    sent_s.append(q["start"]); sent_e.append(q["end"])
+                    sent_l.append(q["language"])
+                sent_off[i + 1] = len(sent_s)
+                for q in st["sections"]:
+                    for k in sec_cols:
+                        sec_cols[k].append(q[k])
+                sec_off[i + 1] = len(sec_cols["start"])
 
             def lst(offsets, child):
                 return pa.ListArray.from_arrays(pa.array(offsets), child)
@@ -203,35 +132,33 @@ def _extract_documents_arrow_native(
                  pa.array(np.zeros(n_pages_tot, dtype=np.int32))],
                 names=["number", "start", "end", "bbox", "rotation"],
             )
-            cols = [
-                pa.array(ids, type=pa.string()),
-                pa.array(needs),
-                lst(f_off, pa.array(f_val, type=pa.string())),
-                lst(s_off, spans_struct),
-                pa.array(pt, type=pa.string()),
-                lst(p_off, pages_struct),
-            ]
-            if with_structure:
-                def text_spans(ss, ee, ll):
-                    return pa.StructArray.from_arrays(
-                        [pa.array(ss, type=pa.int32()),
-                         pa.array(ee, type=pa.int32()),
-                         pa.array(ll, type=pa.string())],
-                        names=["start", "end", "language"],
-                    )
-
-                sections_struct = pa.StructArray.from_arrays(
-                    [pa.array(sec_cols["start"], type=pa.int32()),
-                     pa.array(sec_cols["end"], type=pa.int32()),
-                     pa.array(sec_cols["title"], type=pa.string()),
-                     pa.array(sec_cols["title_start"], type=pa.int32()),
-                     pa.array(sec_cols["title_end"], type=pa.int32()),
-                     pa.array(sec_cols["level"], type=pa.int32()),
-                     pa.array(sec_cols["abs_level"], type=pa.int32())],
-                    names=["start", "end", "title", "title_start", "title_end",
-                           "level", "abs_level"],
+            def text_spans(ss, ee, ll):
+                return pa.StructArray.from_arrays(
+                    [pa.array(ss, type=pa.int32()),
+                     pa.array(ee, type=pa.int32()),
+                     pa.array(ll, type=pa.string())],
+                    names=["start", "end", "language"],
                 )
-                cols.append(pa.StructArray.from_arrays(
+
+            sections_struct = pa.StructArray.from_arrays(
+                [pa.array(sec_cols["start"], type=pa.int32()),
+                 pa.array(sec_cols["end"], type=pa.int32()),
+                 pa.array(sec_cols["title"], type=pa.string()),
+                 pa.array(sec_cols["title_start"], type=pa.int32()),
+                 pa.array(sec_cols["title_end"], type=pa.int32()),
+                 pa.array(sec_cols["level"], type=pa.int32()),
+                 pa.array(sec_cols["abs_level"], type=pa.int32())],
+                names=["start", "end", "title", "title_start", "title_end",
+                       "level", "abs_level"],
+            )
+            yield {
+                "doc_id": batch.column(0),
+                "needs_ocr": needs,
+                "parse_failures": lst(f_off, pa.array(f_val, type=pa.string())),
+                "out_spans": lst(s_off, spans_struct),
+                "plain_text": pt,
+                "pages": lst(p_off, pages_struct),
+                "structure": pa.StructArray.from_arrays(
                     [pa.array(st_title, type=pa.string()),
                      pa.array(st_lang, type=pa.string()),
                      lst(para_off, text_spans(para_s, para_e, para_l)),
@@ -239,15 +166,13 @@ def _extract_documents_arrow_native(
                      lst(sec_off, sections_struct)],
                     names=["title", "language", "paragraphs", "sentences",
                            "sections"],
-                ))
-            yield pa.RecordBatch.from_arrays(
-                [c.cast(f.type) for c, f in zip(cols, arrow_schema)],
-                schema=arrow_schema,
-            )
+                ),
+            }
 
-    return docs.select(
-        F.col(doc_id_col).cast("string").alias(doc_id_col), text_col
-    ).mapInArrow(gen, schema=out_schema)
+    return arrowmap.map_batches(
+        docs.select(F.col(doc_id_col).cast("string").alias(doc_id_col), text_col),
+        gen, _RESULTS_SCHEMA,
+    )
 
 
 def extract_from_documents(
@@ -256,21 +181,17 @@ def extract_from_documents(
     text_col: str = "text",
     fanout_threshold: int | None = restitch.DEFAULT_FANOUT_THRESHOLD,
     with_structure: bool = True,
-    engine: str = "auto",
 ) -> DataFrame:
     """documents -> extraction results (one row per doc).
 
-    ``engine="auto"`` (default, r6) picks per the measured boundary
-    economics: WITHOUT structure the pure-expression catalyst pipeline
-    wins (0.76 s vs 0.99 s at sf1.0 — no python boundary at all beats
-    paying one); WITH structure a python pass is unavoidable (the
-    segmenter), so the ``mapInArrow`` kernel that does extraction AND
-    structure in that same pass wins decisively (1.22 s vs 1.63 s at
-    sf1.0; 4.97 s vs 8.53 s on an 800k-doc corpus — the r5 "arrow is
-    slower" measurement was the old pandas-object kernel at 512-row
-    batches; ``_extract_documents_arrow_native`` builds the nested
-    columns from flat pyarrow buffers instead). Both engines are pinned
-    row-for-row equal (tests/test_integration.py).
+    The path follows from ``with_structure``, per the measured boundary
+    economics (r6): WITHOUT structure the pure-expression catalyst
+    pipeline wins (0.76 s vs 0.99 s at sf1.0 — no python boundary at all
+    beats paying one); WITH structure a python pass is unavoidable (the
+    segmenter), so the Arrow kernel that does extraction AND structure in
+    that same pass wins decisively (1.22 s vs 1.63 s at sf1.0; 4.97 s vs
+    8.53 s on an 800k-doc corpus). The two paths are pinned row-for-row
+    equal (tests/test_integration.py).
 
     Giant-doc routing happens HERE, on the RAW text length, not downstream
     on ``size(spans)``: a filter over the derived-spans projection gets
@@ -286,8 +207,6 @@ def extract_from_documents(
     derive_spans assigns sequential offsets, so density is an invariant
     here — declared statically (dense=True) rather than re-discovered with
     a per-row pass (the round-2 assembly-family bench regression)."""
-    if engine == "auto":
-        engine = "arrow" if with_structure else "catalyst"
     route = fanout_threshold is not None and fanout_threshold > 0
     if route:
         tlen = F.length(F.coalesce(F.col(text_col), F.lit("")))
@@ -301,21 +220,15 @@ def extract_from_documents(
         small_docs = docs.where((tlen <= cutoff) | ~has_word)
         giant_docs = docs.where(giant_pred)
 
-    if engine == "arrow":
+    if with_structure:
         if not route:
-            return _extract_documents_arrow_native(
-                docs, doc_id_col, text_col, with_structure
-            )
-        small_res = _extract_documents_arrow_native(
-            small_docs, doc_id_col, text_col, with_structure
-        )
+            return _extract_documents_arrow_native(docs, doc_id_col, text_col)
+        small_res = _extract_documents_arrow_native(small_docs, doc_id_col, text_col)
         giant = ds.derive_spans(giant_docs, doc_id_col=doc_id_col, text_col=text_col)
         giant_res = layout.assemble(
             restitch.process_spans_fanout(giant, may_have_empty=False), dense=True
         )
-        if with_structure:
-            giant_res = structure.with_structure(giant_res)
-        return small_res.unionByName(giant_res)
+        return small_res.unionByName(structure.with_structure(giant_res))
 
     if route:
         small = ds.derive_spans(small_docs, doc_id_col=doc_id_col, text_col=text_col)
@@ -323,16 +236,10 @@ def extract_from_documents(
         stitched = restitch.process_spans_inline(small).unionByName(
             restitch.process_spans_fanout(giant, may_have_empty=False)
         )
-        assembled = layout.assemble(stitched, dense=True)
-        if not with_structure:
-            return assembled
-        return structure.with_structure(assembled)
+        return layout.assemble(stitched, dense=True)
     spans = ds.derive_spans(docs, doc_id_col=doc_id_col, text_col=text_col)
     return extract_from_spans(
-        spans,
-        fanout_threshold=fanout_threshold,
-        with_structure=with_structure,
-        dense=True,
+        spans, fanout_threshold=fanout_threshold, with_structure=False, dense=True
     )
 
 
