@@ -310,26 +310,33 @@ INCR_COMMITTED_MOD = 3
 INCR_THRESHOLD = 0.5
 
 
+#: the tables whose files key the durable state: signatures derive from
+#: documents, IVF centroids / PQ codebooks / SRP buckets from embeddings
+STATE_TABLES = ("documents", "embeddings")
+
+
 def _state_dir(sf_dir: str) -> str:
     """Durable-state directory for a corpus (write-once, like the production
     committed tables). Keyed by a content-derived id — the sorted data-file
-    list with per-file size+mtime (lineage.snapshot_id's recipe) — so a
-    changed corpus never reuses stale signatures. A single stat of the path
-    is NOT enough: a Spark-written corpus is a DIRECTORY, and an in-place
-    regeneration that preserves the directory entry keeps its inode
-    mtime/size while every data file changes."""
+    list with per-file size+mtime (lineage.snapshot_id's recipe) of every
+    STATE_TABLES table present — so a changed corpus never reuses stale
+    state: regenerating only embeddings must retrain the ANN artifacts. A
+    single stat of the path is NOT enough: a Spark-written corpus is a
+    DIRECTORY, and an in-place regeneration that preserves the directory
+    entry keeps its inode mtime/size while every data file changes."""
     import hashlib
 
-    doc = os.path.join(sf_dir, "documents.parquet")
     entries = []
-    for root, _dirs, files in os.walk(doc):
-        for fn in files:
-            st = os.stat(os.path.join(root, fn))
-            entries.append(f"{os.path.relpath(os.path.join(root, fn), doc)}"
-                           f":{st.st_size}:{st.st_mtime_ns}")
-    if not entries:  # single-file parquet
-        st = os.stat(doc)
-        entries = [f".:{st.st_size}:{st.st_mtime_ns}"]
+    for table in STATE_TABLES:
+        path = os.path.join(sf_dir, f"{table}.parquet")
+        if os.path.isfile(path):  # single-file parquet
+            st = os.stat(path)
+            entries.append(f"{table}/.:{st.st_size}:{st.st_mtime_ns}")
+        for root, _dirs, files in os.walk(path):
+            for fn in files:
+                st = os.stat(os.path.join(root, fn))
+                entries.append(f"{table}/{os.path.relpath(os.path.join(root, fn), path)}"
+                               f":{st.st_size}:{st.st_mtime_ns}")
     key = hashlib.md5(
         (os.path.abspath(sf_dir) + "|" + "|".join(sorted(entries))).encode()
     ).hexdigest()[:10]

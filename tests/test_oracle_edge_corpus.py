@@ -44,10 +44,11 @@ DOC_ONLY_QUERIES = [
 
 
 @pytest.fixture(scope="module")
-def edge_dir(spark):
+def edge_dir(spark, drop_state):
     d = tempfile.mkdtemp()
     spark.createDataFrame(DOCS).write.parquet(f"{d}/documents.parquet")
-    return d
+    yield d
+    drop_state(d)  # incremental_dedup keeps its signature table per corpus
 
 
 @pytest.fixture(scope="module")
@@ -72,11 +73,15 @@ def test_edge_corpus_parity(spark, edge_dir, duck, name):
     pd.testing.assert_frame_equal(sdf, odf, check_dtype=False)
 
 
-EMB_QUERIES = ["ann_topk", "ann_lsh_topk", "ann_ivf_topk", "emb_near_dup"]
+EMB_QUERIES = [
+    "ann_topk", "ann_lsh_topk", "ann_ivf_topk", "emb_near_dup",
+    "ann_ivf_trained", "ann_pq_topk", "ann_pq_rerank", "ann_ivf_pq",
+    "incremental_ann",
+]
 
 
 @pytest.fixture(scope="module")
-def emb_dir(spark):
+def emb_dir(spark, drop_state):
     import numpy as np
 
     rng = np.random.RandomState(7)
@@ -89,7 +94,8 @@ def emb_dir(spark):
     )
     d = tempfile.mkdtemp()
     spark.createDataFrame(pdf).write.parquet(f"{d}/embeddings.parquet")
-    return d
+    yield d
+    drop_state(d)  # the trained/persisted ANN queries keep state per corpus
 
 
 @pytest.fixture(scope="module")
@@ -106,7 +112,8 @@ def test_edge_embeddings_parity(spark, emb_dir, emb_duck, name):
     """Zero-norm vectors (NULL cosine via try_divide, sorted last under DESC
     in both engines), exact duplicates (cosine-1 ties) and antipodes must not
     diverge the similarity queries — a zero embedding previously raised
-    ANSI DIVIDE_BY_ZERO and killed the job."""
+    ANSI DIVIDE_BY_ZERO and killed the job. The corpus has no documents
+    table, which the persisted-state queries must not need."""
     q = entry.queries()[name](spark, emb_dir)
     cols = q.columns
     sdf = q.toPandas().sort_values(by=cols).reset_index(drop=True).astype(str)

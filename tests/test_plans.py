@@ -179,59 +179,43 @@ def test_ivf_training_descends(spark):
 
 
 def test_vectorized_ivf_assignment_bit_identical(spark):
-    """Round-2 verdict item 4: the numpy mapInPandas assignment must choose
-    EXACTLY the same cell as the interpreted HOF expression for every row —
-    not within tolerance, identical (the accumulation replays the fold's
-    multiply/add order). Cell identity is what partitioning needs; a single
-    divergent row would send a vector to a different IVF partition."""
+    """Round-2 verdict item 4: the numpy Arrow-kernel assignment must choose
+    EXACTLY the same cell as the interpreted per-row expression
+    (``ivf_cell_col(ivf_dists_col(...))``) for every row — not within
+    tolerance, identical (the accumulation replays the fold's multiply/add
+    order). Cell identity is what partitioning needs; a single divergent
+    row would send a vector to a different IVF partition. The hash
+    centroids put every sf0.001 vector in one cell, so trained centroids
+    make the check discriminate between many cells."""
     from pyspark.sql import functions as F
 
     from text_extraction_system_spark.operators import similarity
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    cells_lit = similarity._ivf_cells_lit(64, similarity.IVF_CENTROIDS)
-    hof = emb.select(
-        "vec_id",
-        similarity.ivf_cell_col(
-            similarity.ivf_dists_col(F.col("embedding"), cells_lit)
-        ).alias("cell"),
-    )
-    vec = similarity.assign_cells_vectorized(emb).select("vec_id", "cell")
-    diff = (
-        hof.alias("h")
-        .join(vec.alias("v"), "vec_id")
-        .where(F.col("h.cell") != F.col("v.cell"))
-        .count()
-    )
-    assert diff == 0
-    assert vec.count() == emb.count()
-
-
-def test_vectorized_topk_bit_identical(spark):
-    """r6: the numpy partial-top-k scorer must reproduce the HOF
-    broadcast-join formulation EXACTLY — same (query, cand, rank) rows,
-    same cosine bits — for both the brute-force and the IVF-probed shape
-    (the kernel replays the fold's multiply/add order and the probe-cell
-    tie-break)."""
-    from text_extraction_system_spark.operators import similarity
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    for fn in (similarity.brute_force_topk, similarity.ivf_topk):
-        slow = {
-            (r["query_id"], r["rank"]): (r["cand_id"], r["cosine"])
-            for r in fn(emb, vectorized=False).collect()
-        }
-        fast = {
-            (r["query_id"], r["rank"]): (r["cand_id"], r["cosine"])
-            for r in fn(emb, vectorized=True).collect()
-        }
-        assert fast == slow, fn.__name__
+    trained = similarity.ivf_train(emb, iters=2)
+    for cents, min_cells in ((None, 1), (trained, 32)):
+        cells_lit = similarity._ivf_cells_lit(64, similarity.IVF_CENTROIDS, cents)
+        hof = emb.select(
+            "vec_id",
+            similarity.ivf_cell_col(
+                similarity.ivf_dists_col(F.col("embedding"), cells_lit)
+            ).alias("cell"),
+        )
+        vec = similarity.assign_cells_vectorized(emb, centroids=cents).select(
+            "vec_id", "cell"
+        )
+        joined = hof.alias("h").join(vec.alias("v"), "vec_id")
+        assert joined.where(F.col("h.cell") != F.col("v.cell")).count() == 0
+        assert joined.count() == vec.count() == emb.count()
+        assert vec.select("cell").distinct().count() >= min_cells
 
 
 def test_vectorized_srp_signatures_bit_identical(spark):
-    """The numpy SRP signature twin must emit EXACTLY the HOF's bucket
-    strings for every (row, band) — identical sign bits from the replayed
-    fold — on both the 64-dim embeddings and the 16-dim media features."""
+    """The numpy SRP signature kernel must emit EXACTLY the bucket strings
+    of ``srp_band_buckets_col`` — the per-row expression the streaming ANN
+    job serves — for every (row, band): identical sign bits from the
+    replayed fold, on both the 64-dim embeddings and the 16-dim media
+    features."""
     from pyspark.sql import functions as F
 
     from text_extraction_system_spark.operators import multimodal, similarity
@@ -246,9 +230,15 @@ def test_vectorized_srp_signatures_bit_identical(spark):
         ),
     ]
     for df, kw in cases:
-        hof = similarity.srp_banded_buckets(df, vectorized=False, **kw)
-        vec = similarity.srp_banded_buckets(df, vectorized=True, **kw)
+        hof = df.select(
+            F.col(kw["id_col"]).alias("vid"),
+            F.inline(
+                similarity.srp_band_buckets_col(F.col(kw["vec_col"]), dim=kw["dim"])
+            ),
+        )
+        vec = similarity.srp_banded_buckets(df, max_bucket=0, **kw)
         n = hof.count()
+        assert n == df.count() * similarity.N_BANDS
         assert vec.count() == n
         joint = hof.join(vec, ["vid", "band", "bucket"]).count()
         assert joint == n, f"{n - joint} divergent (row, band) signatures for {kw}"
@@ -425,24 +415,6 @@ def test_arrow_signature_rows_match_hof(spark):
     assert a == b and a
 
 
-def test_arrow_simhash_matches_hof(spark):
-    """The Arrow simhash kernel equals the Catalyst vote fold value-for-
-    value (same tokens, same md5 token hashes, same bit votes)."""
-    from pyspark.sql import functions as F
-
-    from text_extraction_system_spark.operators import textstats
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    a = {r["doc_id"]: r["simhash"]
-         for r in textstats.simhash_rows(docs).collect()}
-    b = {r["doc_id"]: r["simhash"]
-         for r in docs.select(
-             F.col("doc_id").cast("string").alias("doc_id"),
-             textstats.simhash_col(F.col("text")).alias("simhash"),
-         ).collect()}
-    assert a == b and a
-
-
 def test_arrow_readorder_synthesis_matches_hof(spark):
     """The Arrow word-box synthesis equals the Catalyst one value-for-value
     (tokens, md5 column counts, layout coords, md5-keyed scramble order)."""
@@ -457,114 +429,6 @@ def test_arrow_readorder_synthesis_matches_hof(spark):
     a = snap(readorder_op.synth_word_box_arrays_arrow(docs))
     b = snap(readorder_op.synth_word_box_arrays(docs))
     assert a == b and a
-
-
-def test_arrow_repetition_matches_dataframe_form(spark):
-    """The shuffle-free repetition kernel equals the explode/groupBy
-    DataFrame form value-for-value."""
-    from text_extraction_system_spark import pipeline
-    from text_extraction_system_spark.operators import textstats
-
-    res = pipeline.extract_from_documents(
-        spark.read.parquet(f"{SF}/documents.parquet"), with_structure=False
-    )
-    frac_cols = (
-        [f"top_{n}gram_char_frac" for n in textstats.TOP_NS[1:]]
-        + [f"dup_{n}gram_char_frac" for n in textstats.DUP_NS]
-    )
-
-    def snap(df):
-        def fmt(v):
-            return None if v is None else f"{v:.17g}"
-
-        return {r["doc_id"]: (r["n_lines"], fmt(r["dup_line_frac"]),
-                              fmt(r["dup_line_char_frac"]), r["top_gram"],
-                              fmt(r["top_gram_char_frac"]),
-                              *[fmt(r[c]) for c in frac_cols])
-                for r in df.collect()}
-    a = snap(textstats.repetition_rows_arrow(res))
-    b = snap(textstats.repetition_rows(res))
-    assert a == b and a
-    # the full Gopher battery is populated: long docs carry every column,
-    # and at least one short doc exercises the NULL (no such n-gram) path
-    assert any(all(x is not None for x in v[5:]) for v in a.values())
-
-
-def test_repetition_chain_path_matches_counter_and_dataframe(spark):
-    """The giant-doc numpy rolling-key path produces the same Gopher
-    fractions as the Counter path and the exploded DataFrame form: one doc
-    above NP_CHAIN_MIN_TOKENS with engineered line and n-gram repeats runs
-    through all three."""
-    from pyspark.sql import functions as F
-
-    from text_extraction_system_spark.operators import textstats
-
-    words = [f"w{i % 97}" for i in range(5000)] + ["alpha", "beta"] * 40
-    text = "line one\nline one\n" + " ".join(words)
-    big = spark.createDataFrame([("giant", text)], "doc_id string, plain_text string")
-
-    frac_cols = (
-        [f"top_{n}gram_char_frac" for n in textstats.TOP_NS[1:]]
-        + [f"dup_{n}gram_char_frac" for n in textstats.DUP_NS]
-    )
-
-    def snap(df):
-        r = df.collect()[0]
-        return (r["n_lines"], f"{r['dup_line_frac']:.17g}", r["top_gram"],
-                f"{r['top_gram_char_frac']:.17g}",
-                *[f"{r[c]:.17g}" for c in frac_cols])
-
-    arrow = snap(textstats.repetition_rows_arrow(big))       # chain path
-    frame = snap(textstats.repetition_rows(big))             # exploded form
-    assert arrow == frame
-
-    # the Counter path on the same shape of doc, below the switch threshold
-    small_words = words[: 2000]
-    text_small = "line one\nline one\n" + " ".join(small_words + ["alpha", "beta"] * 40)
-    small = spark.createDataFrame(
-        [("small", text_small)], "doc_id string, plain_text string"
-    )
-    assert snap(textstats.repetition_rows_arrow(small)) == snap(
-        textstats.repetition_rows(small)
-    )
-
-
-def test_tfidf_vectorized_row_equal(spark):
-    """r6: the Arrow tf-Counter formulation of tfidf_keywords must emit
-    exactly the explode+groupBy form's rows on a real corpus slice."""
-    from text_extraction_system_spark.operators import textstats
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-
-    def snap(df):
-        return {(r["doc_id"], r["rank"]): (r["token"], r["tf"], r["df"], r["score"])
-                for r in df.collect()}
-
-    assert snap(textstats.tfidf_keywords(docs, vectorized=True)) == snap(
-        textstats.tfidf_keywords(docs, vectorized=False)
-    )
-
-
-def test_dup_windows_vectorized_row_equal(spark):
-    """r6: the Arrow Counter + window-count formulation of
-    dup_window_coverage must emit EXACTLY the expression form's rows
-    (same 60-bit md5 window hashes via py_tokens, same counts) on a real
-    corpus slice."""
-    from text_extraction_system_spark.operators import dedup
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-
-    def snap(df):
-        return {
-            r["doc_id"]: (r["n_windows"], r["dup_windows"],
-                          r["distinct_shared_windows"],
-                          f"{r['dup_window_frac']:.17g}")
-            for r in df.collect()
-        }
-
-    assert snap(dedup.dup_window_coverage(docs, vectorized=True)) == snap(
-        dedup.dup_window_coverage(docs, vectorized=False)
-    )
 
 
 def test_tfidf_and_dup_windows_semantics(spark):
@@ -683,28 +547,3 @@ def test_mixture_plan_semantics(spark):
     ).collect()}
     assert again["big"]["docs_sampled"] == b["docs_sampled"]
     assert again["big"]["tokens_sampled"] == b["tokens_sampled"]
-
-
-def test_vectorized_pq_bit_identical(spark):
-    """r6: the ADC partial-top-k kernel and the fused assign+encode must
-    reproduce the expression/join formulations exactly — same rows, same
-    adc/cosine bits — for plain PQ, reranked PQ, and IVF-PQ."""
-    from text_extraction_system_spark.operators import similarity
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    books = similarity.pq_train(emb)
-    cents = similarity.ivf_train(emb, iters=2)
-
-    def snap(df):
-        return {(r["query_id"], r["rank"]): tuple(r) for r in df.collect()}
-
-    cases = [
-        (similarity.pq_topk(emb, books, vectorized=True),
-         similarity.pq_topk(emb, books, vectorized=False)),
-        (similarity.pq_topk(emb, books, rerank=20, vectorized=True),
-         similarity.pq_topk(emb, books, rerank=20, vectorized=False)),
-        (similarity.ivf_pq_topk(emb, cents, books, vectorized=True),
-         similarity.ivf_pq_topk(emb, cents, books, vectorized=False)),
-    ]
-    for fast, slow in cases:
-        assert snap(fast) == snap(slow)

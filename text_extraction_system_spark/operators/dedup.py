@@ -2,9 +2,9 @@
 candidate-pair generation, exact n-gram Jaccard verification.
 
 Scale shape (the reason this is LSH and not O(n^2)): signatures and bands are
-per-row Catalyst expressions (narrow); the only shuffle is the band-bucket
-self-join, whose buckets are tiny by construction (a band collision implies
-high estimated Jaccard). At 10^12 docs the bucket join is the classic
+per-row work (narrow — one Arrow kernel pass); the only shuffle is the
+band-bucket self-join, whose buckets are tiny by construction (a band
+collision implies high estimated Jaccard). At 10^12 docs the bucket join is the classic
 dedup-at-scale plan; a skew guard caps pathological buckets.
 
 MinHash family: h_p(s) = ((2p+1) * h(s) + p) mod MINHASH_MOD over the doc's
@@ -29,7 +29,10 @@ MAX_BUCKET = 64
 
 
 def shingles_col(text: Column, k: int = spec.SHINGLE_K) -> Column:
-    """Distinct word k-shingles of a text column."""
+    """Distinct word k-shingles of a text column. Production code with
+    ``minhash_sig_col``/``band_sigs_col``: the streaming dedup job
+    (``streaming/jobs.py``) signs micro-batches with this expression chain,
+    and ``signature_rows_hof`` is its per-row reference."""
     words = F.filter(F.split(text, " "), lambda w: w != "")
     n = F.size(words) - (k - 1)
     idx = F.when(n > 0, F.sequence(F.lit(0), n - 1)).otherwise(F.array().cast("array<int>"))
@@ -42,7 +45,8 @@ def minhash_sig_col(shingles: Column, perms: int = spec.MINHASH_PERMS) -> Column
     """array<bigint> of length ``perms``: min affine-permuted shingle hash.
 
     The shingle-hash array is let-bound so the md5 pass runs once, not once
-    per permutation."""
+    per permutation. Production code: the streaming dedup job serves it
+    (see ``shingles_col``)."""
     from . import textstats
 
     def sig(hs: Column) -> Column:
@@ -62,7 +66,9 @@ def minhash_sig_col(shingles: Column, perms: int = spec.MINHASH_PERMS) -> Column
 
 def band_sigs_col(sig: Column, bands: int = spec.LSH_BANDS,
                   perms: int = spec.MINHASH_PERMS) -> Column:
-    """array<struct<band:int, band_sig:string>> — md5 of each band's rows."""
+    """array<struct<band:int, band_sig:string>> — md5 of each band's rows.
+    Production code: the streaming dedup job serves it (see
+    ``shingles_col``)."""
     rows = perms // bands
     return F.transform(
         F.sequence(F.lit(0), F.lit(bands - 1)),
@@ -182,41 +188,34 @@ def _shingle_hash_rows_arrow(docs: DataFrame, doc_id_col: str = "doc_id",
 
 
 def doc_shingles(docs: DataFrame, doc_id_col: str = "doc_id",
-                 text_col: str = "text", vectorized: bool = True) -> DataFrame:
+                 text_col: str = "text") -> DataFrame:
     """(doc_id, shingles) for docs with at least one shingle.
 
-    ``vectorized=True`` (r6): one Arrow pass builds the distinct-shingle
-    string arrays in python (same split-on-space/drop-empties words, same
-    k, emitted sorted — a deterministic order, which array_intersect/union
-    set sizes are insensitive to) instead of the interpreted per-shingle
-    slice+array_join HOF. Row-equal up to array order (pytest pins the
-    jaccard consumers bit-equal)."""
-    if vectorized:
-        k = spec.SHINGLE_K
+    One Arrow pass builds the distinct-shingle string arrays in python
+    (the words and k of ``shingles_col``, emitted sorted — a deterministic
+    order, which array_intersect/union set sizes are insensitive to)
+    instead of the interpreted per-shingle slice+array_join HOF; the
+    jaccard consumer (``near_dup_pairs``) is pinned by its DuckDB twin."""
+    k = spec.SHINGLE_K
 
-        def gen(batches):
-            for batch in batches:
-                ids: list = []
-                sh: list = []
-                for doc_id, text in arrowmap.rows(batch, "doc_id", text_col):
-                    words = [w for w in (text or "").split(" ") if w]
-                    if len(words) < k:
-                        continue
-                    ids.append(doc_id)
-                    sh.append(sorted({
-                        " ".join(words[i:i + k])
-                        for i in range(len(words) - k + 1)
-                    }))
-                yield {"doc_id": ids, "shingles": sh}
+    def gen(batches):
+        for batch in batches:
+            ids: list = []
+            sh: list = []
+            for doc_id, text in arrowmap.rows(batch, "doc_id", text_col):
+                words = [w for w in (text or "").split(" ") if w]
+                if len(words) < k:
+                    continue
+                ids.append(doc_id)
+                sh.append(sorted({
+                    " ".join(words[i:i + k]) for i in range(len(words) - k + 1)
+                }))
+            yield {"doc_id": ids, "shingles": sh}
 
-        return arrowmap.map_batches(
-            docs.select(F.col(doc_id_col).cast("string").alias("doc_id"), text_col),
-            gen, "doc_id string, shingles array<string>",
-        )
-    return docs.select(
-        F.col(doc_id_col).cast("string").alias("doc_id"),
-        shingles_col(F.col(text_col)).alias("shingles"),
-    ).where(F.size("shingles") > 0)
+    return arrowmap.map_batches(
+        docs.select(F.col(doc_id_col).cast("string").alias("doc_id"), text_col),
+        gen, "doc_id string, shingles array<string>",
+    )
 
 
 def lsh_candidate_pairs(docs: DataFrame, doc_id_col: str = "doc_id",
@@ -334,10 +333,16 @@ def contamination_report(
 
 def signature_rows_hof(docs: DataFrame, doc_id_col: str = "doc_id",
                        text_col: str = "text") -> DataFrame:
-    """Pure-Catalyst formulation of the signature band rows — kept as the
-    value-twin the Arrow kernel is pinned against (tests/test_plans.py);
-    vectorized=False keeps this twin fully independent of python code."""
-    sigs = doc_shingles(docs, doc_id_col, text_col, vectorized=False).select(
+    """Pure-Catalyst formulation of the signature band rows — the
+    ``shingles_col`` -> ``minhash_sig_col`` -> ``band_sigs_col`` chain the
+    streaming dedup job serves, kept as the per-row reference the Arrow
+    kernel is pinned against (tests/test_plans.py); no python code runs
+    in it."""
+    sh = docs.select(
+        F.col(doc_id_col).cast("string").alias("doc_id"),
+        shingles_col(F.col(text_col)).alias("shingles"),
+    ).where(F.size("shingles") > 0)
+    sigs = sh.select(
         "doc_id",
         exprutil.let(
             minhash_sig_col(F.col("shingles")),
@@ -475,7 +480,7 @@ def _doc_window_counts_arrow(docs: DataFrame, n: int, doc_id_col: str,
     Hashes are the exact ``token_hash_col(..., hex_chars=15)`` values
     (same md5 prefix, same tokenization via ``py_tokens``); docs with
     fewer than n tokens emit no rows, matching explode's inner-join
-    semantics. Pinned row-equal to the expression form by pytest."""
+    semantics."""
     import hashlib
     from collections import Counter
 
@@ -510,8 +515,7 @@ def _doc_window_counts_arrow(docs: DataFrame, n: int, doc_id_col: str,
 
 def dup_window_coverage(docs: DataFrame, n: int = DUP_WINDOW_TOKENS,
                         doc_id_col: str = "doc_id",
-                        text_col: str = "text",
-                        vectorized: bool = True) -> DataFrame:
+                        text_col: str = "text") -> DataFrame:
     """Per-document cross-corpus duplication signal: the fraction of the
     doc's n-token windows that also occur in at least one OTHER document
     (plus the distinct shared-window count). Doc-level MinHash finds
@@ -521,64 +525,28 @@ def dup_window_coverage(docs: DataFrame, n: int = DUP_WINDOW_TOKENS,
     character coverage: the ranking is the same and the aggregation needs
     no interval union).
 
-    Scale shape: one window explode, windows immediately collapsed to a
-    60-bit md5-prefix integer so every downstream shuffle carries
-    (doc_id, bigint) instead of a ~50-char string -> per-(doc, window)
-    counts [shuffle 1] -> per-window distinct-doc counts over the distinct
-    (doc, window) pairs [shuffle 2, shared-vocabulary-sized] -> hash join
-    back on window hash -> per-doc rollup [shuffle 3]. Nothing is
-    pairwise; an md5 collision would need ~2^30 distinct shared windows
-    per partition-of-interest (birthday bound) and is deterministic and
-    engine-identical anyway, so the oracle stays bit-exact. Docs shorter
-    than n tokens have no windows and emit no row.
-
-    ``vectorized=True`` (default, r6): stage 1 runs as the Arrow Counter
-    kernel (``_doc_window_counts_arrow`` — the per-(doc, window) grouping
-    is doc-local, so its corpus-wide exchange disappears), and the
-    per-window doc count comes from ``count(*) over (partition by win)``
-    instead of the aggregate + join-back — per_doc_win rows are distinct
-    per (doc, win), so the window count IS n_docs_with, and the plan
-    drops from 3 exchanges + a vocabulary-sized join build side to
-    exactly 2 skinny-row exchanges (win, then doc_id); the window count
-    also removes the join's broadcast-vs-SMJ cliff when the vocabulary
-    outgrows the broadcast threshold. Row-equal to the expression form
-    (pytest) and oracle-hash unchanged."""
+    Scale shape: windows are collapsed to a 60-bit md5-prefix integer so
+    every shuffle carries (doc_id, bigint) instead of a ~50-char string.
+    The per-(doc, window) counts come from the Arrow Counter kernel
+    (``_doc_window_counts_arrow`` — the grouping is doc-local, so it needs
+    no exchange); the per-window doc count is ``count(*) over (partition
+    by win)`` — per_doc_win rows are distinct per (doc, win), so the
+    window count IS n_docs_with — and a per-doc rollup follows: exactly 2
+    skinny-row exchanges (win, then doc_id), no join, so no
+    broadcast-vs-SMJ cliff when the window vocabulary outgrows the
+    broadcast threshold. Nothing is pairwise; an md5 collision would need
+    ~2^30 distinct shared windows per partition-of-interest (birthday
+    bound) and is deterministic and engine-identical anyway, so the oracle
+    stays bit-exact. Docs shorter than n tokens have no windows and emit
+    no row."""
     from pyspark.sql.window import Window
 
-    from .textstats import ngram_col, token_hash_col
-
-    if vectorized:
-        per_doc_win = _doc_window_counts_arrow(docs, n, doc_id_col, text_col)
-        counted = per_doc_win.withColumn(
-            "n_docs_with", F.count(F.lit(1)).over(Window.partitionBy("win"))
-        )
-        return (
-            counted.groupBy("doc_id")
-            .agg(
-                F.sum("occ").cast("bigint").alias("n_windows"),
-                F.sum(F.when(F.col("n_docs_with") > 1, F.col("occ")).otherwise(0))
-                .cast("bigint").alias("dup_windows"),
-                F.sum(F.when(F.col("n_docs_with") > 1, 1).otherwise(0))
-                .cast("bigint").alias("distinct_shared_windows"),
-            )
-            .select(
-                "doc_id", "n_windows", "dup_windows", "distinct_shared_windows",
-                (F.col("dup_windows") / F.col("n_windows")).alias("dup_window_frac"),
-            )
-        )
-    wins = docs.select(
-        F.col(doc_id_col).cast("string").alias("doc_id"),
-        F.explode(ngram_col(F.col(text_col), n)).alias("win_s"),
-    ).select("doc_id", token_hash_col(F.col("win_s"), hex_chars=15).alias("win"))
-    per_doc_win = wins.groupBy("doc_id", "win").agg(
-        F.count(F.lit(1)).cast("bigint").alias("occ")
-    )
-    win_docs = per_doc_win.groupBy("win").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs_with")
+    per_doc_win = _doc_window_counts_arrow(docs, n, doc_id_col, text_col)
+    counted = per_doc_win.withColumn(
+        "n_docs_with", F.count(F.lit(1)).over(Window.partitionBy("win"))
     )
     return (
-        per_doc_win.join(win_docs, "win")
-        .groupBy("doc_id")
+        counted.groupBy("doc_id")
         .agg(
             F.sum("occ").cast("bigint").alias("n_windows"),
             F.sum(F.when(F.col("n_docs_with") > 1, F.col("occ")).otherwise(0))

@@ -1,6 +1,10 @@
 """Text-analytics operators — token stats, quality scoring, language ID,
-document fingerprinting, simhash. All pure Catalyst expressions (JVM-side,
-whole-stage codegen); every one has a DuckDB-SQL twin in ``__spark_entry__``.
+document fingerprinting, simhash, repetition signals, TF-IDF keywords.
+Per-row signals are Catalyst expressions (JVM-side, whole-stage codegen);
+the ones whose interpreted form is per-token heavy (simhash, repetition,
+the TF-IDF term counts) run as Arrow kernels through ``arrowmap``. Every
+operator has a DuckDB-SQL twin in ``__spark_entry__``, and
+tests/test_oracle_parity.py pins the kernels against theirs.
 
 These are the training-data-pipeline operators layered on top of the
 reference's extraction capabilities (task brief: dedup / quality / lang-ID /
@@ -130,63 +134,6 @@ def fingerprint_col(text: Column) -> Column:
     )
 
 
-def simhash_col(text: Column, bits: int = 32) -> Column:
-    """SimHash over token hashes (8 hex chars -> 32-bit token hash): for each
-    bit, vote +1/-1 per token; bit set iff vote > 0."""
-    toks = tokens_col(text)
-    hashes = F.transform(toks, lambda t: token_hash_col(t, hex_chars=8))
-    # single pass over the token hashes: fold a 32-long vote vector
-    # (one md5 per token total; a per-bit formulation would recompute the
-    # token hashes `bits` times — measured 12x slower). Bit b is extracted
-    # as h % 2^(b+1) >= 2^b against LITERAL power arrays — the previous
-    # floor(h / pow(2.0, b)) % 2 paid a double pow + floor per bit per token
-    # in the interpreted HOF evaluator (this fold was 1.8s of the 3.1s query)
-    powers = F.array(*[F.lit(1 << b).cast("bigint") for b in range(bits)])
-    twopow = F.array(*[F.lit(1 << (b + 1)).cast("bigint") for b in range(bits)])
-
-    def bit_votes(h: Column) -> Column:
-        return F.zip_with(
-            powers,
-            twopow,
-            lambda p, q: F.when(h % q >= p, F.lit(1)).otherwise(F.lit(-1)).cast("bigint"),
-        )
-
-    votes = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0).cast("bigint"), bits),
-        lambda acc, h: F.zip_with(acc, bit_votes(h), lambda a, v: a + v),
-    )
-    # reference `votes` exactly ONCE: higher-order functions run interpreted
-    # (no codegen, no common-subexpression elimination), so indexing the fold
-    # result per bit would re-run the whole fold per bit
-    contrib = F.zip_with(
-        votes, powers, lambda v, p: F.when(v > 0, p).otherwise(F.lit(0).cast("bigint"))
-    )
-    return F.aggregate(contrib, F.lit(0).cast("bigint"), lambda a, x: a + x)
-
-
-def ngram_col(text: Column, n: int) -> Column:
-    """Adjacent word n-grams (space-joined) of the normalized token stream;
-    empty array below n tokens."""
-    from .exprutil import let
-
-    def grams(ws: Column) -> Column:
-        return F.when(
-            F.size(ws) >= n,
-            F.transform(
-                F.sequence(F.lit(0), F.size(ws) - n),
-                lambda i: F.concat_ws(" ", F.slice(ws, i + 1, n)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-
-    return let(tokens_col(text), grams)
-
-
-def bigram_col(text: Column) -> Column:
-    """Adjacent word 2-grams of the normalized token stream."""
-    return ngram_col(text, 2)
-
-
 #: the full Gopher repetition battery (Rae et al. 2021, Table A1): top
 #: n-gram character share for these n ...
 TOP_NS = (2, 3, 4)
@@ -197,103 +144,12 @@ TOP_NS = (2, 3, 4)
 #: which buys little discrimination for meaningfully more state.
 DUP_NS = (5, 6, 7, 8, 9, 10)
 
-
-def repetition_rows(assembled, text_col: str = "plain_text"):
-    """Gopher-style repetition quality signals over the EXTRACTED text (the
-    post-extraction filter every LLM data pipeline runs — Rae et al. 2021
-    'repetition' heuristics): fraction of duplicate lines (count and
-    char-weighted), the character share of the most frequent word n-gram
-    for n in TOP_NS, and the duplicate-n-gram character share for n in
-    DUP_NS. Line identity uses the engine's own '\\n' paragraph separators
-    ('\\f' page marks stripped first); in this text model lines ARE the
-    paragraphs (single-\\n separators), so Gopher's line/paragraph pairs
-    collapse to one family. Docs too short for a given n carry NULL for
-    that column (they have no n-grams to judge).
-
-    Scale shape: explode -> two-level hash aggregations (doc_id, key) ->
-    per-doc rollup per family, plus one per-doc top-1 window per TOP_NS
-    size — no per-doc state wider than its own lines/grams, shuffles keyed
-    by (doc_id, line/gram) hash. Ties on a top gram break to the
-    lexicographically smallest gram (deterministic, SQL-portable). This
-    exploded form is the semantic REFERENCE; the served kernel is the
-    shuffle-free Arrow twin (repetition_rows_arrow), pinned value-identical."""
-    from pyspark.sql.window import Window
-
-    lines_arr = F.filter(
-        F.split(F.translate(F.col(text_col), "\f", ""), "\n"),
-        lambda x: x != "",
-    )
-    lines = assembled.select("doc_id", F.explode(lines_arr).alias("line"))
-    per_line = lines.groupBy("doc_id", "line").agg(F.count(F.lit(1)).alias("cnt"))
-    line_stats = per_line.groupBy("doc_id").agg(
-        F.sum("cnt").cast("bigint").alias("n_lines"),
-        F.count(F.lit(1)).cast("bigint").alias("n_distinct"),
-        F.sum(F.col("cnt") * F.length("line")).cast("bigint").alias("line_chars"),
-        F.sum(
-            F.when(F.col("cnt") > 1, F.col("cnt") * F.length("line")).otherwise(0)
-        ).cast("bigint").alias("dup_chars"),
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.col("cnt").desc(), F.col("gram"))
-
-    def per_gram_for(n: int):
-        grams = assembled.select(
-            "doc_id", F.explode(ngram_col(F.col(text_col), n)).alias("gram")
-        )
-        return grams.groupBy("doc_id", "gram").agg(F.count(F.lit(1)).alias("cnt"))
-
-    per_gram = per_gram_for(2)
-    top = (
-        per_gram.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("doc_id", F.col("gram").alias("top_gram"), F.col("cnt").alias("top_cnt"))
-    )
-    gram_tot = per_gram.groupBy("doc_id").agg(
-        F.sum(F.col("cnt") * F.length("gram")).cast("bigint").alias("gram_chars")
-    )
-    out = (
-        line_stats.join(top, "doc_id").join(gram_tot, "doc_id")
-        .select(
-            "doc_id",
-            "n_lines",
-            ((F.col("n_lines") - F.col("n_distinct")) / F.col("n_lines"))
-            .alias("dup_line_frac"),
-            (F.col("dup_chars") / F.col("line_chars")).alias("dup_line_char_frac"),
-            "top_gram",
-            (F.col("top_cnt") * F.length("top_gram") / F.col("gram_chars"))
-            .alias("top_gram_char_frac"),
-        )
-    )
-    for n in TOP_NS[1:]:
-        pg = per_gram_for(n)
-        topn = (
-            pg.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select(
-                "doc_id", F.col("gram").alias("tg"), F.col("cnt").alias("tc")
-            )
-        )
-        totn = pg.groupBy("doc_id").agg(
-            F.sum(F.col("cnt") * F.length("gram")).cast("bigint").alias("gc")
-        )
-        frac = topn.join(totn, "doc_id").select(
-            "doc_id",
-            (F.col("tc") * F.length("tg") / F.col("gc"))
-            .alias(f"top_{n}gram_char_frac"),
-        )
-        out = out.join(frac, "doc_id", "left")
-    for n in DUP_NS:
-        pg = per_gram_for(n)
-        dupn = pg.groupBy("doc_id").agg(
-            (
-                F.sum(
-                    F.when(F.col("cnt") > 1, F.col("cnt") * F.length("gram"))
-                    .otherwise(0)
-                ).cast("bigint")
-                / F.sum(F.col("cnt") * F.length("gram")).cast("bigint")
-            ).alias(f"dup_{n}gram_char_frac")
-        )
-        out = out.join(dupn, "doc_id", "left")
-    return out
+#: tokens above which repetition_rows_arrow counts n-grams with the numpy
+#: rolling-key chain instead of python Counters (measured: per-call numpy
+#: overhead dominates below ~this size — the sf corpora average ~57
+#: tokens/doc and Counters are ~2.5x faster there; a 100k-token giant doc
+#: inverts it)
+NP_CHAIN_MIN_TOKENS = 4096
 
 
 def py_tokens(text: str) -> list:
@@ -308,12 +164,13 @@ def py_tokens(text: str) -> list:
 
 def simhash_rows(docs, doc_id_col: str = "doc_id", text_col: str = "text",
                  bits: int = 32):
-    """(doc_id, simhash) via one Arrow pass — VALUE-IDENTICAL to the
-    ``simhash_col`` fold (pinned by pytest): same token stream, same
-    8-hex-char md5 token hashes, same +1/-1 bit votes with bit set iff
-    vote > 0, all exact integer arithmetic. The interpreted fold costs
-    32 zip_with lambda evaluations per token; the numpy kernel does the
-    same votes in one (tokens x bits) pass (~1.5 s -> ~0.4 s at sf0.1)."""
+    """(doc_id, simhash) via one Arrow pass: SimHash over token hashes
+    (8 hex chars of md5 -> 32-bit token hash); for each bit every token
+    votes +1/-1 and the bit is set iff the vote is > 0 — all exact integer
+    arithmetic, equal to the DuckDB twin (tests/test_oracle_parity.py).
+    An interpreted Catalyst vote fold costs 32 zip_with lambda evaluations
+    per token; the numpy kernel does the same votes in one (tokens x bits)
+    pass (~1.5 s -> ~0.4 s at sf0.1)."""
     import hashlib
 
     import numpy as np
@@ -334,7 +191,7 @@ def simhash_rows(docs, doc_id_col: str = "doc_id", text_col: str = "text",
                     votes = 2 * ones.astype(np.int64) - len(toks)
                     sim = int(((votes > 0).astype(np.uint64) << shifts).sum())
                 else:
-                    sim = 0  # the fold over zero hashes leaves every vote 0
+                    sim = 0  # no tokens: every vote stays 0
                 vals.append(sim)
             yield {"doc_id": batch.column(doc_id_col), "simhash": vals}
 
@@ -345,19 +202,29 @@ def simhash_rows(docs, doc_id_col: str = "doc_id", text_col: str = "text",
 
 
 def repetition_rows_arrow(assembled, text_col: str = "plain_text"):
-    """Shuffle-free Arrow twin of ``repetition_rows`` (value-identical,
-    pinned by pytest): per-doc line/n-gram counting is bounded by the doc's
-    own size, so python Counters per doc beat exploding every line and
-    n-gram into corpus-wide shuffles — at 10^12 docs the exploded groupBy
-    shape moves ~tokens-many rows through the cluster once PER GRAM SIZE
-    (nine times for the full Gopher battery) for counts each task could
-    produce locally. N-grams are counted WITHOUT building a string per
-    occurrence — token-tuple Counters for ordinary docs, a numpy rolling
-    dense-key chain for giant ones (NP_CHAIN_MIN_TOKENS switch; both paths
-    pinned equal) — and only top-count candidates are joined to strings
-    for the lexicographic tie-break. Ties break to the lexicographically
-    smallest gram, as in the DataFrame form; docs too short for a gram
-    size carry None for that column."""
+    """Gopher-style repetition quality signals over the EXTRACTED text (the
+    post-extraction filter every LLM data pipeline runs — Rae et al. 2021
+    'repetition' heuristics): fraction of duplicate lines (count and
+    char-weighted), the character share of the most frequent word n-gram
+    for n in TOP_NS, and the duplicate-n-gram character share for n in
+    DUP_NS. Line identity uses the engine's own '\\n' paragraph separators
+    ('\\f' page marks stripped first); in this text model lines ARE the
+    paragraphs (single-\\n separators), so Gopher's line/paragraph pairs
+    collapse to one family. Docs with no line or fewer than 2 tokens emit
+    no row; docs too short for a given n carry None for that column.
+
+    Shuffle-free Arrow kernel: per-doc line/n-gram counting is bounded by
+    the doc's own size, so python Counters per doc beat exploding every
+    line and n-gram into corpus-wide shuffles — at 10^12 docs an exploded
+    groupBy shape moves ~tokens-many rows through the cluster once PER
+    GRAM SIZE (nine times for the full Gopher battery) for counts each
+    task could produce locally. N-grams are counted WITHOUT building a
+    string per occurrence — token-tuple Counters for ordinary docs, a numpy
+    rolling dense-key chain for giant ones (NP_CHAIN_MIN_TOKENS switch) —
+    and only top-count candidates are joined to strings for the
+    tie-break: ties on a top gram break to the lexicographically smallest
+    gram (deterministic, SQL-portable). Both paths are pinned against the
+    DuckDB twin by tests/test_oracle_parity.py."""
     from collections import Counter
 
 
@@ -367,12 +234,6 @@ def repetition_rows_arrow(assembled, text_col: str = "plain_text"):
     )
     cols = ["doc_id", "n_lines", "dup_line_frac", "dup_line_char_frac",
             "top_gram", "top_gram_char_frac"] + frac_cols
-
-    #: tokens above which the numpy rolling-key chain beats python Counters
-    #: (measured: per-call numpy overhead dominates below ~this size — the
-    #: sf corpora average ~57 tokens/doc and Counters are ~2.5x faster
-    #: there; a 100k-token giant doc inverts it)
-    NP_CHAIN_MIN_TOKENS = 4096
 
     def gen(batches):
         import numpy as np
@@ -448,7 +309,7 @@ def repetition_rows_arrow(assembled, text_col: str = "plain_text"):
                 lines = [x for x in (text or "").replace("\f", "").split("\n") if x]
                 toks = py_tokens(text)
                 if not lines or len(toks) < 2:
-                    continue  # inner-join semantics of the DataFrame form
+                    continue  # no lines / no 2-gram: no row (as the twin)
                 csum = np.concatenate((
                     [0], np.cumsum([len(t) for t in toks], dtype=np.int64)
                 ))
@@ -486,12 +347,12 @@ def repetition_rows_arrow(assembled, text_col: str = "plain_text"):
 
 def _doc_token_counts_arrow(docs, doc_id_col: str, text_col: str):
     """(doc_id, token, tf) per-doc term frequencies via one Arrow pass —
-    the shuffle-free twin of explode(tokens_col) -> groupBy(doc_id, token)
+    the shuffle-free form of explode(tokens_col) -> groupBy(doc_id, token)
     (r6): the tf grouping is doc-local, so a python Counter per doc
     produces the distinct counts without shipping every token occurrence
     through the first exchange. Same tokenization as ``tokens_col`` via
     ``py_tokens``; docs with zero tokens emit no rows (explode's
-    inner-join semantics). Pinned row-equal by pytest."""
+    inner-join semantics)."""
     from collections import Counter
 
     def gen(batches):
@@ -513,12 +374,13 @@ def _doc_token_counts_arrow(docs, doc_id_col: str, text_col: str):
 
 
 def tfidf_keywords(docs, k: int = 3, doc_id_col: str = "doc_id",
-                   text_col: str = "text", vectorized: bool = True):
+                   text_col: str = "text"):
     """Per-document top-k keywords by TF-IDF — the corpus-level two-pass
     curation operator (per-doc signals like quality/repetition need no
-    corpus state; this one does): one token explode feeds BOTH the per-doc
-    term frequencies and the corpus document frequencies, then a hash join
-    on token brings the IDF weight back to each (doc, token).
+    corpus state; this one does): one per-doc term-frequency pass feeds
+    BOTH the per-doc term frequencies and the corpus document frequencies,
+    then a hash join on token brings the IDF weight back to each
+    (doc, token).
 
     Scoring is INTEGER-exact (oracle-hashable — see the float-exact
     recipe): idf_scaled = (1_000_000 * n_docs) div df (integer division,
@@ -527,41 +389,24 @@ def tfidf_keywords(docs, k: int = 3, doc_id_col: str = "doc_id",
     anyway) and score = tf * idf_scaled, all BIGINT. Ties break by token
     string ascending.
 
-    Scale shape: explode -> (doc, token) count [shuffle 1] -> token df
-    aggregate [shuffle 2, vocabulary-sized] -> hash join on token (the
-    vocabulary at web scale is ~10^8 rows — NOT broadcastable; the join
-    hashes both sides on token) -> per-doc top-k window [shuffle 3 on
-    doc_id]. n_docs rides in as a 1-row broadcast cross join.
-
-    ``vectorized=True`` (default, r6): the tf stage runs as the Arrow
-    Counter kernel (``_doc_token_counts_arrow`` — per-doc grouping needs
-    no exchange), localCheckpointed (the repo's established
-    materialize-once pattern, see lsh_candidate_pairs) so the three
-    consumers (df, n_docs, the join probe) read the materialized blocks
-    instead of re-running the kernel per branch. The token-occurrence
-    explode and its corpus-wide first shuffle leave the plan; df/n_docs/
-    join/window are unchanged. Row-equal to the expression form
-    (pytest), oracle hashes unchanged."""
+    Scale shape: the tf stage is the Arrow Counter kernel
+    (``_doc_token_counts_arrow`` — per-doc grouping needs no exchange) ->
+    token df aggregate [shuffle on token, vocabulary-sized] -> hash join on
+    token (the vocabulary at web scale is ~10^8 rows — NOT broadcastable;
+    the join hashes both sides on token) -> per-doc top-k window [shuffle
+    on doc_id]. n_docs rides in as a 1-row broadcast cross join. The tf rows
+    are localCheckpointed (the repo's established materialize-once
+    pattern, see lsh_candidate_pairs) so the three consumers (df, n_docs,
+    the join probe) read the materialized blocks instead of re-running
+    the kernel per branch."""
     from pyspark.sql.window import Window
 
-    if vectorized:
-        tf = _doc_token_counts_arrow(docs, doc_id_col, text_col).localCheckpoint(
-            eager=False
-        )
-    else:
-        toks = docs.select(
-            F.col(doc_id_col).cast("string").alias("doc_id"),
-            F.explode(tokens_col(F.col(text_col))).alias("token"),
-        )
-        tf = toks.groupBy("doc_id", "token").agg(
-            F.count(F.lit(1)).cast("bigint").alias("tf")
-        )
-    # df and n_docs derive from tf, NOT from a second/third pass over the
-    # raw token explode: the (doc, token) rows are already distinct after
-    # the tf aggregate, so count(*) == count_distinct — and because all
-    # three branches share the identical tf subtree, Catalyst reuses ONE
-    # token-explode shuffle (ReusedExchange) instead of re-scanning and
-    # re-exploding the corpus per branch
+    tf = _doc_token_counts_arrow(docs, doc_id_col, text_col).localCheckpoint(
+        eager=False
+    )
+    # df and n_docs derive from tf, NOT from another pass over the raw
+    # text: the (doc, token) rows are already distinct, so
+    # count(*) == count_distinct
     df = tf.groupBy("token").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
     n_docs = tf.select("doc_id").distinct().agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs")
